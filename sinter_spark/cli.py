@@ -81,7 +81,7 @@ def _get_spark(cores: str | None):
         return active
     from .session import get_spark
 
-    # None defers to get_spark's default ($SPARK_GRAFT_CPUS, else 32)
+    # None defers to get_spark's default ($SPARK_GRAFT_CPUS, else every host core)
     return get_spark(cores=cores, app_name="sinter_cli")
 
 
@@ -836,7 +836,7 @@ def _common(p: argparse.ArgumentParser, *, schema: bool) -> None:
     p.add_argument("--format", default="parquet", choices=["parquet", "csv", "json"])
     p.add_argument("--csv-header", action="store_true", help="csv: first line is a header")
     p.add_argument("--output", required=True, help="output directory")
-    p.add_argument("--cores", default=None, help="local session cores when not under spark-submit (default $SPARK_GRAFT_CPUS, else 32)")
+    p.add_argument("--cores", default=None, help="local session cores when not under spark-submit (default $SPARK_GRAFT_CPUS, else every host core)")
     if schema:
         p.add_argument("--schema", required=True, help="schema JSON file (api.schema_from_dict format)")
 

@@ -9,33 +9,28 @@ The scale story (100 TB):
   correct as an oracle, not the scale path.
 * **MinHash + banded LSH** — the scale path. The signature is
   row-local (the doc's shingle set lives in the doc's row, so no
-  explode+groupBy shuffle of a k×-corpus-size stream) with two
-  interchangeable implementations:
+  explode+groupBy shuffle of a k×-corpus-size stream) and computed by
+  one vectorized numpy kernel over ``mapInArrow``: byte k-gram codes
+  via a sliding window, splitmix64, then 64 affine (a·h+b mod 2⁶⁴)
+  min-hashes per doc. Narrow map, zero exchanges, ~200× faster per
+  core than interpreted Catalyst higher-order functions (measured
+  0.94 s single-core vs 6.2 s × 32 cores on 5,000 docs). The scalar
+  twins in ``lsh_fixtures`` and the DuckDB oracles pin its values.
 
-  - ``impl="arrow"`` (default) — a vectorized numpy kernel over
-    ``mapInArrow``: byte k-gram codes via a sliding window, distinct,
-    splitmix64, then 64 affine (a·h+b mod 2⁶⁴) min-hashes in one
-    matrix op. Narrow map, zero exchanges, ~200× faster per core
-    than interpreted Catalyst higher-order functions (measured
-    0.94 s single-core vs 6.2 s × 32 cores on 5,000 docs).
-  - ``impl="column"`` — pure built-in expressions (``aggregate``
-    over the shingle array carrying 64 running mins via
-    ``zip_with``): zero Python anywhere, same plan shape, slower
-    constant factor. NOTE: the tempting
-    ``transform(seeds, i -> array_min(transform(shingles, ...)))``
-    form is ~20× WORSE — Catalyst HOFs re-evaluate the collection
-    argument per outer element (no CSE); measured 118 s vs 6.2 s.
+  Banding feeds :func:`grouped_bucket_pairs`: one exchange on the
+  bucket key, a window that ranks each bucket's distinct members, a
+  bounded ``collect_list`` and a bucket-local Arrow pair-explode
+  kernel — no join. Buckets above ``max_bucket`` are dropped before
+  the explode (degenerate boilerplate clusters would otherwise make
+  the pair count quadratic); exact dedup catches those, and
+  :func:`dropped_mass` reports the loss.
+* **SimHash** — 64-bit near-dup fingerprint from one vectorized Arrow
+  kernel (per-doc token-hash bit sums); hamming-block buckets take the
+  same grouped pair path instead of all-pairs.
 
-  Banding → bucket join so only candidate pairs meet; buckets above
-  ``max_bucket`` are dropped (degenerate boilerplate clusters would
-  otherwise make the join quadratic) and exact dedup catches those.
-* **SimHash** — 64-bit near-dup fingerprint, one row-local
-  expression (token-hash bit sums via ``aggregate``/``zip_with``);
-  hamming-block buckets join instead of all-pairs.
-
-Signature computation never shuffles in either impl. Candidate bucket
-tables are persisted before the self-join so the signature subtree is
-computed once.
+Signature computation never shuffles. With ``cache`` the bounded
+bucket aggregate is persisted, so the oversized-bucket audit and the
+pair expansion share one signature computation.
 """
 
 from __future__ import annotations
@@ -45,10 +40,6 @@ from pyspark.storagelevel import StorageLevel
 
 from .uniqueness import duplicate_keys  # noqa: F401  (re-export: exact dedup)
 from .text import fingerprint
-
-_LONG_MAX = (1 << 63) - 1
-# POWERS[i] = 1 << i as a signed 64-bit value (bit 63 wraps to Long.MIN).
-_POW2 = [1 << i for i in range(63)] + [-(1 << 63)]
 
 
 def exact_dup_groups(
@@ -141,39 +132,6 @@ def jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    k: int = 4,
-    n_hashes: int = 64,
-) -> DataFrame:
-    """(id, sig array<bigint>): n_hashes min-hash values per doc, each
-    the min of xxhash64(seed_i, shingle).
-
-    Row-local and shuffle-free: the shingle array is the *argument* of
-    ``F.aggregate`` (evaluated once per row), and the aggregate carries
-    an array of n_hashes running mins updated via ``zip_with`` — one
-    narrow projection, zero exchanges. Hash values are identical to the
-    explode+groupBy formulation (same ``xxhash64(int_seed, shingle)``
-    over the same distinct-shingle set), so banding downstream is
-    unchanged.
-    """
-    from ..plans import widen_small_scan
-
-    seeds = F.sequence(F.lit(0), F.lit(n_hashes - 1))  # array<int>, constant-folded
-    init = F.array_repeat(F.lit(_LONG_MAX).cast("bigint"), n_hashes)
-    sig = F.aggregate(
-        _shingle_array(text_col, k),
-        init,
-        lambda acc, s: F.zip_with(acc, seeds, lambda a, i: F.least(a, F.xxhash64(i, s))),
-    )
-    # hashing is compute-heavy: widen an under-split (tiny-file) scan so
-    # every core participates — a no-op on any real-scale table
-    return widen_small_scan(df).select(F.col(id_col), sig.alias("sig"))
-
-
 def minhash_signatures_arrow(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -199,11 +157,9 @@ def minhash_signatures_arrow(
     pandas/Arrow UDFs (no per-row Python)" — literally: the only
     Python iteration is over Arrow batches and the 64 hash functions.
 
-    Semantics vs :func:`minhash_signatures` (column impl): same
-    banding/recall behavior, different (equally valid) hash family —
-    affine transforms of one splitmix64 base hash, the standard
-    MinHash construction; the recall gate vs exact Jaccard
-    (tests/test_entry_oracle.py) runs against this impl. Docs with
+    Hash family: affine transforms of one splitmix64 base hash, the
+    standard MinHash construction; the recall gate vs exact Jaccard
+    (tests/test_entry_oracle.py) runs against this kernel. Docs with
     NULL text are omitted (grouped-form semantics); docs shorter than
     k bytes all share one constant signature (they band together and
     the mega-bucket cap + exact dedup own them). Shingles are byte
@@ -325,8 +281,8 @@ def release_cache(pairs: DataFrame) -> None:
     """Unpersist the bucket table a candidate-pair DataFrame holds.
 
     ``minhash_lsh_candidates`` / ``hamming_block_pairs`` /
-    ``rp_lsh_near_pairs`` persist their bucket projection so the
-    signature subtree is computed once across the self-join; the handle
+    ``rp_lsh_near_pairs`` persist their bucket aggregate so the audit
+    and the pair expansion share one signature computation; the handle
     rides on the returned DataFrame (``_sinter_persisted``). Call this
     after materializing the pairs (or pass ``cache=False``) in
     long-lived sessions — otherwise each call leaves one cached table
@@ -370,15 +326,13 @@ def grouped_bucket_pairs(
     by every LSH candidate path (minhash bands, hamming blocks, rp-lsh
     blocks, winnow fingerprints).
 
-    The old self-join shape shuffles the bucket table TWICE (once per
-    join side) and, uncached, recomputes its whole subtree per side.
-    Here ONE ``groupBy(keys)`` collects each bucket's sorted member
-    array, the mega-bucket cap is enforced per key, and pairs explode
-    BUCKET-LOCALLY from the array with nested ``transform``/``slice``
-    — one exchange for the agg, zero for pair generation. ``_ids`` is
-    a materialized row field, so the inner ``slice`` re-reads a field,
-    not a subtree (Catalyst HOFs do not CSE expensive collection
-    arguments).
+    A self-join shape would shuffle the bucket table TWICE (once per
+    join side) and, uncached, recompute its whole subtree per side.
+    Here ONE aggregate over ``keys`` collects each bucket's sorted
+    member array, the mega-bucket cap is enforced per key, and pairs
+    explode BUCKET-LOCALLY from that array in
+    :func:`_pair_explode_kernel`, a vectorized ``mapInArrow`` kernel —
+    one exchange for the aggregate, zero for pair generation.
 
     Returns ``(pairs, audit, handle)``: pairs carry (id_a, id_b) —
     plus (va, vb) when ``extra_col`` names a per-member payload column
@@ -602,15 +556,11 @@ def minhash_buckets(
     k: int = 4,
     n_hashes: int = 64,
     bands: int = 16,
-    impl: str = "arrow",
 ) -> DataFrame:
-    """(id, band, bucket): banded LSH bucket assignments over MinHash.
-
-    ``impl``: "arrow" (default — vectorized numpy kernel) or "column"
-    (pure built-in expressions); see module docstring for tradeoffs.
-    Band hashing is always JVM-side (xxhash64 over sig slices)."""
-    make_sig = minhash_signatures_arrow if impl == "arrow" else minhash_signatures
-    sig = make_sig(df, id_col, text_col, k=k, n_hashes=n_hashes)
+    """(id, band, bucket): banded LSH bucket assignments over
+    :func:`minhash_signatures_arrow`. Band hashing is JVM-side
+    (xxhash64 over sig slices)."""
+    sig = minhash_signatures_arrow(df, id_col, text_col, k=k, n_hashes=n_hashes)
     return sig.select(F.col(id_col), _band_explode(n_hashes, bands)).select(
         id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
@@ -644,10 +594,9 @@ def minhash_lsh_candidates(
     bands: int = 16,
     max_bucket: int | None = 1000,
     cache: bool = True,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Candidate near-dup pairs (a < b) via banded LSH over MinHash:
-    docs agreeing on ALL rows of ≥1 band meet in a bucket join.
+    docs agreeing on ALL rows of ≥1 band meet in a bucket.
     bands=16 × rows=4 ⇒ ~(J^4) per-band match prob: catches J ≳ 0.5.
 
     Self-join-free (v4; v5 concentration-proofed): per-band buckets
@@ -657,9 +606,9 @@ def minhash_lsh_candidates(
     with the cap no degenerate bucket concentrates its membership in
     one aggregation state); buckets larger than ``max_bucket`` are
     dropped pre-aggregation with the mass reportable via
-    :func:`dropped_mass`. ``impl``: see :func:`minhash_buckets`.
+    :func:`dropped_mass`.
     """
-    raw = minhash_buckets(df, id_col, text_col, k=k, n_hashes=n_hashes, bands=bands, impl=impl)
+    raw = minhash_buckets(df, id_col, text_col, k=k, n_hashes=n_hashes, bands=bands)
     bucket_pairs, audit, handle = grouped_bucket_pairs(
         raw, ["band", "bucket"], id_col, max_bucket, cache,
         pair_mode="distinct_sets",
@@ -1009,55 +958,6 @@ def dedup_canonical(
     return df.join(losers, id_col, "left_anti")
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, simhash bigint): 64-bit SimHash over word tokens.
-
-    Row-local and shuffle-free: the token-hash array is the argument
-    of one ``F.aggregate`` carrying 64 signed bit-counters (zip_with +
-    getbit); the fingerprint bit i is the sign of Σ±1 over token-hash
-    bit i. Values are identical to the explode+groupBy formulation
-    (same xxhash64 token hashes, same sign rule, bit 63 wrapping to
-    Long.MIN), with zero exchanges. Docs with no tokens are omitted,
-    matching the grouped form where explode yields no rows.
-    """
-    tokens = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda w: F.length(w) > 0
-    )
-    hashes = F.transform(tokens, lambda w: F.xxhash64(w))
-    bits = F.sequence(F.lit(0), F.lit(63))
-    init = F.array_repeat(F.lit(0).cast("bigint"), 64)
-    sums = F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            bits,
-            lambda a, i: a
-            + F.when(F.getbit(h, i) == 1, F.lit(1).cast("bigint")).otherwise(
-                F.lit(-1).cast("bigint")
-            ),
-        ),
-    )
-    powers = F.array(*[F.lit(p).cast("bigint") for p in _POW2])
-    sim = F.aggregate(
-        F.zip_with(
-            sums,
-            powers,
-            lambda s, p: F.when(s > 0, p).otherwise(F.lit(0).cast("bigint")),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda a, x: a + x,
-    )
-    from ..plans import widen_small_scan
-
-    return (
-        widen_small_scan(df)
-        .select(F.col(id_col), F.size(tokens).alias("_ntok"), sim.alias("simhash"))
-        .where(F.col("_ntok") > 0)
-        .drop("_ntok")
-    )
-
-
 def simhash_arrow(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1080,14 +980,9 @@ def simhash_arrow(
     of where the token sits in the buffer — finalized with splitmix64;
     per-doc bit sums are one ``unpackbits`` over all token hashes +
     segmented ``np.add.reduceat``; fingerprint bit i is set iff
-    strictly more token hashes have bit i set than unset (the same
-    ±1-sum sign rule as :func:`simhash`).
-
-    Different (equally valid) hash family than :func:`simhash`'s
-    xxhash64, so fingerprints are NOT value-identical to the column
-    impl; hamming-proximity behavior is equivalent (identical docs →
-    identical fingerprints; near-identical docs → small distance).
-    Docs with no tokens are omitted, matching the column impl.
+    strictly more token hashes have bit i set than unset (the ±1-sum
+    sign rule). Identical docs → identical fingerprints; near-identical
+    docs → small hamming distance. Docs with no tokens are omitted.
     Tokens split at bytes ≤ 0x20 (Java ``\\s`` is the ASCII subset of
     that — control bytes also split here; documented divergence).
 
@@ -1197,17 +1092,13 @@ def _simhash_arrow_kernel(id_col: str):
 
 
 def simhash_blocks(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", *, impl: str = "arrow"
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id, simhash, blk, val): 4×16-bit block bucket assignments —
     the SimHash instantiation of :func:`_block_bucket_table` (kept as a
-    public audit view; the pair join uses :func:`hamming_block_pairs`).
-
-    ``impl``: "arrow" (default — vectorized numpy kernel) or "column"
-    (pure built-in expressions)."""
-    make = simhash_arrow if impl == "arrow" else simhash
+    public audit view; the pairs come from :func:`hamming_block_pairs`)."""
     return _block_bucket_table(
-        make(df, id_col, text_col), id_col, "simhash",
+        simhash_arrow(df, id_col, text_col), id_col, "simhash",
         n_blocks=4, block_bits=16, pair_blocks=False,
     ).withColumnRenamed("_sig", "simhash").select(id_col, "simhash", "blk", "val")
 
@@ -1272,8 +1163,8 @@ def hamming_block_pairs(
     cache: bool = True,
 ) -> DataFrame:
     """Near-dup pairs (id_a < id_b, hamming) over any 64-bit fingerprint
-    column, by hamming-block LSH: only fingerprints agreeing on ≥1
-    bucket key meet in the join; the exact ``bit_count(xor)`` then
+    column, by hamming-block LSH: only fingerprints sharing ≥1
+    bucket key are paired; the exact ``bit_count(xor)`` then
     filters to ``hamming ≤ max_hamming``.
 
     Bucket keys (Manku/Jain/Sarma, WWW'07 "Detecting Near-Duplicates
@@ -1338,16 +1229,14 @@ def simhash_near_pairs(
     max_hamming: int = 3,
     max_bucket: int | None = 1000,
     cache: bool = True,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ max_hamming, using
     4×16-bit block buckets (two fingerprints within hamming 3 agree on
-    ≥1 of 4 blocks) — bucket join instead of all-pairs, persisted once,
-    mega-buckets dropped. Thin wrapper over :func:`hamming_block_pairs`.
-    ``impl``: see :func:`simhash_blocks`."""
-    make = simhash_arrow if impl == "arrow" else simhash
+    ≥1 of 4 blocks) — bucket pairs instead of all-pairs, persisted
+    once, mega-buckets dropped. Thin wrapper over
+    :func:`hamming_block_pairs`."""
     return hamming_block_pairs(
-        make(df, id_col, text_col),
+        simhash_arrow(df, id_col, text_col),
         id_col,
         "simhash",
         n_blocks=4,

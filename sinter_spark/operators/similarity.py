@@ -78,58 +78,29 @@ def cosine_topk_batch(
     query_vec_col: str = "embedding",
     k: int = 10,
     round_to: int | None = 6,
-    impl: str = "arrow",
     max_queries: int = 10_000,
 ) -> DataFrame:
     """Top-k by cosine for a TABLE of queries at once:
-    (query_id, id, cos_sim), k rows per query, ties broken by id.
+    (query_id, id, cos_sim), k rows per query, ties broken by id —
+    the same rows as :func:`cosine_topk` run once per query.
 
     Offline training-data curation wants top-k against a reference
     corpus for MANY queries (dedup against a golden set, retrieval
     eval) — one job per query would scan the corpus Q times; this
     scans it ONCE.
 
-    ``impl="arrow"`` (the scale path): the query matrix is collected
-    driver-side (bounded by ``max_queries`` — it ships to every task,
-    broadcast-sized by construction, same shape as IVF's centroid
-    matrix) and each Arrow batch computes ONE (batch × dim) ·
-    (dim × Q) matmul; per batch only rows that can still reach the
-    global top-k survive (batch-local kth minus a 2·10^-round_to
-    slack, so boundary ties are never lost to the pruning), then one
-    final per-query top-k. The only shuffle is the final candidate
-    aggregation — Q × k-ish rows per partition, not the corpus.
-
-    ``impl="column"``: pure built-in expressions — broadcast crossJoin
-    + :func:`cosine` + a ranking window. Same results; JVM-only path
-    kept as the oracle twin (SQL-expressible 1:1).
+    The query matrix is collected driver-side (bounded by
+    ``max_queries`` — it ships to every task, broadcast-sized by
+    construction, same shape as IVF's centroid matrix) and each Arrow
+    batch computes ONE (batch × dim) · (dim × Q) matmul; per batch
+    only rows that can still reach the global top-k survive
+    (batch-local kth minus a 2·10^-round_to slack, so boundary ties
+    are never lost to the pruning), then one final per-query top-k.
+    The only shuffle is the final candidate aggregation — Q × k-ish
+    rows per partition, not the corpus.
     """
-    from pyspark.sql import Window
-
-    if impl == "column":
-        q = F.broadcast(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_vec_col).alias("_qv"),
-            )
-        )
-        sim = cosine(F.col(vec_col), F.col("_qv"))
-        if round_to is not None:
-            sim = F.round(sim, round_to)
-        scored = df.crossJoin(q).select(
-            "query_id", F.col(id_col), sim.alias("cos_sim")
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos_sim").desc(), F.col(id_col)
-        )
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-    if impl != "arrow":
-        raise ValueError(f"cosine_topk_batch: unknown impl {impl!r}")
-
     import pyarrow as pa
+    from pyspark.sql import Window
 
     qrows = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("_qv")

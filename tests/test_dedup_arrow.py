@@ -3,10 +3,9 @@ reference of the documented algorithm, edge semantics (null / short /
 token-less docs), hamming-proximity properties, and plan shape.
 
 The kernels (dedup.minhash_signatures_arrow / simhash_arrow) are the
-scale path (north_star: vectorized Arrow UDFs, no per-row Python);
-the column impls stay value-pinned to the round-1 grouped forms in
-test_round2.py. These tests pin the kernels to their own documented
-hash families so a numpy refactor can't silently change buckets.
+only signature implementations (north_star: vectorized Arrow UDFs, no
+per-row Python). These tests pin them to their own documented hash
+families so a numpy refactor can't silently change buckets.
 """
 
 import numpy as np
@@ -128,17 +127,6 @@ def test_arrow_kernels_zero_exchanges(spark, edge):
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
         assert "MapInArrow" in plan
-
-
-def test_arrow_column_impls_agree_on_candidate_scale(spark, sf_dir):
-    """Different hash families → different buckets, but candidate
-    volume over the same corpus must be the same order of magnitude
-    (both run 16×4 banding over the same shingle sets)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = dedup.minhash_lsh_candidates(docs, cache=False, impl="arrow").count()
-    c = dedup.minhash_lsh_candidates(docs, cache=False, impl="column").count()
-    assert a > 0 and c > 0
-    assert 0.5 < a / c < 2.0
 
 
 # ---------------------------------------------------------------------------

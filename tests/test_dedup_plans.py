@@ -1,6 +1,8 @@
 """Plan-shape pins for the round-2 dedup rewrites (VERDICT r1 items
-1-3): signatures must be shuffle-free row-local projections, and the
-LSH bucket table must be computed once (persisted) for the self-join.
+1-3): signatures and banding must be shuffle-free row-local
+projections (the signature kernels' own pin is
+``test_dedup_arrow.py::test_arrow_kernels_zero_exchanges``), and the
+LSH bucket table must be computed once (persisted) with no join.
 
 These are the properties the 100 TB design depends on; a regression
 (e.g. someone reintroducing explode+groupBy signatures) fails here
@@ -18,16 +20,6 @@ from sinter_spark.operators import dedup
 def docs(spark):
     rows = [(f"d{i}", f"some little document number {i} " * 3) for i in range(50)]
     return spark.createDataFrame(rows, "doc_id string, text string")
-
-
-def test_minhash_signatures_zero_exchanges(spark, docs):
-    sig = dedup.minhash_signatures(docs, n_hashes=16)
-    assert plans.count_exchanges(sig) == 0
-
-
-def test_simhash_zero_exchanges(spark, docs):
-    s = dedup.simhash(docs)
-    assert plans.count_exchanges(s) == 0
 
 
 def test_minhash_buckets_zero_exchanges(spark, docs):

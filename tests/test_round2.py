@@ -14,85 +14,8 @@ from sinter_spark.types import coerce_value, validate_value
 
 
 # ---------------------------------------------------------------------------
-# dedup: row-local signatures ≡ grouped formulation, and plan shape
+# dedup: signature plan shape
 # ---------------------------------------------------------------------------
-
-
-def _old_minhash(df, id_col="doc_id", text_col="text", k=4, n_hashes=64):
-    """The round-1 explode+groupBy formulation — kept as the semantic
-    oracle for the shuffle-free rewrite."""
-    c = F.col(text_col)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(c) - (k - 1), F.lit(0)))
-    sh = F.transform(idx, lambda i: F.substring(c, i, k))
-    s = df.select(F.col(id_col), F.explode(F.array_distinct(sh)).alias("shingle"))
-    mins = [F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}") for i in range(n_hashes)]
-    agg = s.groupBy(id_col).agg(*mins)
-    return agg.select(F.col(id_col), F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig"))
-
-
-def _old_simhash(df, id_col="doc_id", text_col="text"):
-    words = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("w"),
-    ).where(F.length("w") > 0)
-    h = F.xxhash64("w")
-    sums = [
-        F.sum(F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"b{i}")
-        for i in range(64)
-    ]
-    agg = words.groupBy(id_col).agg(*sums)
-    acc = F.lit(0).cast("bigint")
-    for i in range(64):
-        acc = acc + F.when(
-            F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("bigint"), i)
-        ).otherwise(F.lit(0).cast("bigint"))
-    return agg.select(F.col(id_col), acc.alias("simhash"))
-
-
-@pytest.fixture(scope="module")
-def edge_docs(spark):
-    return spark.createDataFrame(
-        [
-            ("e1", ""),
-            ("e2", "   "),
-            ("e3", "ab"),
-            ("e4", None),
-            ("e5", "hello world hello"),
-            ("e6", "the quick brown fox jumps over the lazy dog"),
-            ("e7", "thé qüick brown føx"),  # multibyte
-        ],
-        "doc_id string, text string",
-    )
-
-
-def test_minhash_rowlocal_equals_grouped(spark, edge_docs, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    for d in (edge_docs, docs):
-        new = dedup.minhash_signatures(d)
-        old = _old_minhash(d)
-        assert new.count() == old.count()
-        mism = (
-            new.alias("n")
-            .join(old.alias("o"), "doc_id")
-            .where(F.col("n.sig") != F.col("o.sig"))
-            .count()
-        )
-        assert mism == 0
-
-
-def test_simhash_rowlocal_equals_grouped(spark, edge_docs, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    for d in (edge_docs, docs):
-        new = dedup.simhash(d)
-        old = _old_simhash(d)
-        assert new.count() == old.count()
-        mism = (
-            new.alias("n")
-            .join(old.alias("o"), "doc_id")
-            .where(F.col("n.simhash") != F.col("o.simhash"))
-            .count()
-        )
-        assert mism == 0
 
 
 def test_minhash_signature_plan_is_shuffle_free(spark, sf_dir):
@@ -103,7 +26,7 @@ def test_minhash_signature_plan_is_shuffle_free(spark, sf_dir):
     sort — that's input widening, not a computation shuffle, and
     disappears on any real-scale table.)"""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    for q in (dedup.minhash_signatures(docs), dedup.simhash(docs)):
+    for q in (dedup.minhash_signatures_arrow(docs), dedup.simhash_arrow(docs)):
         plan = q._jdf.queryExecution().executedPlan().toString()
         # the only partitioning allowed is the widen's content-hash key
         # — never a grouping key like doc_id (that would mean an
@@ -114,7 +37,7 @@ def test_minhash_signature_plan_is_shuffle_free(spark, sf_dir):
         assert "HashAggregate" not in plan
     # non-file input: zero exchanges of any kind
     mem = spark.createDataFrame([("a", "hello world abcdef")], "doc_id string, text string")
-    for q in (dedup.minhash_signatures(mem), dedup.simhash(mem)):
+    for q in (dedup.minhash_signatures_arrow(mem), dedup.simhash_arrow(mem)):
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
 

@@ -227,11 +227,12 @@ class TestDroppedMassReporting:
         pairs = dedup.minhash_lsh_candidates(docs, max_bucket=None, cache=False)
         assert dedup.dropped_mass(pairs) == {"n_buckets": 0, "n_member_entries": 0}
 
-    def test_batch_topk_arrow_equals_column(self, spark, sf_dir):
-        """The pruned Arrow matmul path must return EXACTLY the rows of
-        the pure-Column (oracle-twin) path — including rounded boundary
-        ties, which the per-batch pruning slack must never lose."""
-        from sinter_spark.operators.similarity import cosine_topk_batch
+    def test_batch_topk_equals_per_query_topk(self, spark, sf_dir):
+        """The pruned Arrow matmul path must return EXACTLY the union of
+        per-query ``cosine_topk`` (the JVM ``cosine()`` expression) —
+        including rounded boundary ties, which the per-batch pruning
+        slack must never lose."""
+        from sinter_spark.operators.similarity import cosine_topk, cosine_topk_batch
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(8)
         qs = (
@@ -239,15 +240,16 @@ class TestDroppedMassReporting:
             .limit(4)
             .select(F.col("vec_id").alias("query_id"), "embedding")
         )
-        key = lambda r: (r["query_id"], r["vec_id"])  # noqa: E731
-        a = sorted(
-            cosine_topk_batch(emb, qs, k=7, round_to=5, impl="arrow").collect(), key=key
+        got = sorted(
+            tuple(r) for r in cosine_topk_batch(emb, qs, k=7, round_to=5).collect()
         )
-        c = sorted(
-            cosine_topk_batch(emb, qs, k=7, round_to=5, impl="column").collect(), key=key
+        want = sorted(
+            (q["query_id"], r["vec_id"], r["cos_sim"])
+            for q in qs.collect()
+            for r in cosine_topk(emb, list(q["embedding"]), k=7, round_to=5).collect()
         )
-        assert [tuple(r) for r in a] == [tuple(r) for r in c]
-        assert len(a) == 4 * 7
+        assert got == want
+        assert len(got) == 4 * 7
 
     def test_batch_topk_bounds(self, spark):
         from sinter_spark.operators.similarity import cosine_topk_batch

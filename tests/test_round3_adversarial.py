@@ -13,12 +13,12 @@ from sinter_spark.images import codecs, jpeg
 
 
 class TestBatchTopkTies:
-    def test_arrow_equals_column_under_massive_ties(self, spark):
+    def test_batch_equals_per_query_under_massive_ties(self, spark):
         """Vectors drawn from a tiny discrete set → many EXACT cos_sim
         ties straddling the k boundary across partitions; the per-batch
-        pruning must keep every tie candidate the column/oracle path
-        would rank in."""
-        from sinter_spark.operators.similarity import cosine_topk_batch
+        pruning must keep every tie candidate that per-query
+        ``cosine_topk`` would rank in."""
+        from sinter_spark.operators.similarity import cosine_topk, cosine_topk_batch
 
         rng = np.random.default_rng(42)
         protos = rng.standard_normal((4, 6))  # only 4 distinct directions
@@ -34,17 +34,16 @@ class TestBatchTopkTies:
             .limit(4)
             .select(F.col("vec_id").alias("query_id"), "embedding")
         )
-        key = lambda r: (r["query_id"], r["vec_id"])  # noqa: E731
-        a = sorted(
-            cosine_topk_batch(emb, qs, k=9, round_to=5, impl="arrow").collect(),
-            key=key,
+        got = sorted(
+            tuple(r) for r in cosine_topk_batch(emb, qs, k=9, round_to=5).collect()
         )
-        c = sorted(
-            cosine_topk_batch(emb, qs, k=9, round_to=5, impl="column").collect(),
-            key=key,
+        want = sorted(
+            (q["query_id"], r["vec_id"], r["cos_sim"])
+            for q in qs.collect()
+            for r in cosine_topk(emb, list(q["embedding"]), k=9, round_to=5).collect()
         )
-        assert [tuple(r) for r in a] == [tuple(r) for r in c]
-        assert len(a) == 4 * 9
+        assert got == want
+        assert len(got) == 4 * 9
 
     def test_ivf_batch_with_duplicate_vectors(self, spark):
         from sinter_spark.operators import ivf
