@@ -30,6 +30,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from .session import local_frame
+
 
 @dataclass(frozen=True)
 class Snapshot:
@@ -180,7 +182,7 @@ class Table:
         from pyspark.sql.types import StructType
 
         meta = self._read_meta()
-        return self.spark.createDataFrame([], StructType.fromJson(json.loads(meta["schema_json"])))
+        return local_frame(self.spark, [], StructType.fromJson(json.loads(meta["schema_json"])))
 
     def read(self) -> DataFrame:
         """Current snapshot."""
@@ -310,7 +312,7 @@ class IcebergCatalog:
 
     def create_table(self, name: str, schema, *, partition_by: list[str] | None = None):
         struct = schema.schema if isinstance(schema, DataFrame) else schema
-        empty = self.spark.createDataFrame([], struct)
+        empty = local_frame(self.spark, [], struct)
         w = empty.writeTo(self._qualified(name)).using("iceberg")
         if partition_by:
             from pyspark.sql import functions as F

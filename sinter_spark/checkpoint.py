@@ -30,6 +30,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, functions as F
 
 from .catalog import get_catalog
+from .session import local_frame
 
 STATE_DDL = (
     "run_id string, bucket int, status string, rows bigint, "
@@ -124,7 +125,7 @@ class CheckpointStore:
             )
             for b in bucket_stats
         ]
-        self._state.append(self.spark.createDataFrame(rows, STATE_DDL).coalesce(1))
+        self._state.append(local_frame(self.spark, rows, STATE_DDL).coalesce(1))
 
     def metrics(self, run_id: str) -> DataFrame:
         return self.state().where(F.col("run_id") == run_id)

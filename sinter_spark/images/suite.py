@@ -3,7 +3,7 @@
 Composes every layer of the engine over the north-star table
 (BASELINE.json): schema/constraint binding (row pass, pure Column
 predicates), the decode/PSNR/caption Arrow kernel, uniqueness on
-image_id and phash (salted two-phase agg), the referential broadcast
+image_id and phash (one plain hash aggregate each), the referential broadcast
 anti-join vs ``fmt_dim``, and KS/PSI drift vs a baseline histogram
 snapshot. This is the job the benchmark times and the scaling-
 efficiency evidence runs.

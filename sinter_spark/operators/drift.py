@@ -141,5 +141,6 @@ def drift_violations(spark, report: list[dict]) -> DataFrame:
         if not (r["ks_pass"] and r["psi_pass"])
     ]
     from ..errors import VIOLATION_DDL
+    from ..session import local_frame
 
-    return spark.createDataFrame(rows, VIOLATION_DDL)
+    return local_frame(spark, rows, VIOLATION_DDL)

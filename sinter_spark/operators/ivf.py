@@ -37,6 +37,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
 from .similarity import cosine
 
 
@@ -455,7 +456,7 @@ def write_ivf_index(
     ).parquet(f"{path}/data")
     spark = df.sparkSession
     cents = [(int(i), [float(x) for x in row]) for i, row in enumerate(centroids)]
-    spark.createDataFrame(cents, "cluster_id int, centroid array<double>").coalesce(
+    local_frame(spark, cents, "cluster_id int, centroid array<double>").coalesce(
         1
     ).write.mode("overwrite").parquet(f"{path}/centroids")
 

@@ -1,7 +1,7 @@
 """Referential-integrity check: broadcast semi/anti join vs a dimension.
 
 north_star: "referential checks via broadcast semi-join against a
-dimension table". The dimension (e.g. ``fmt_dim``, 3 rows) is tiny
+dimension table". The dimension (e.g. ``fmt_dim``, 6 rows) is tiny
 relative to the fact table, so the anti-join MUST be a
 BroadcastHashJoin — no shuffle of the 100 TB side. ``F.broadcast``
 forces it regardless of stats staleness.

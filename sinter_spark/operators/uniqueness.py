@@ -21,10 +21,10 @@ def key_counts(df: DataFrame, keys: list[str] | str, *, salt_buckets: int | None
     base = df.select(*keys).na.drop(how="any", subset=keys)
     if not salt_buckets:
         return base.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
-    # phase 1: aggregate (key, salt) partials — salt derived from a
-    # stable row hash, NOT the key (salting the key itself would be a
-    # no-op for duplicates of the same key... the point is spreading
-    # rows of ONE hot key over many reducers)
+    # phase 1: aggregate (key, salt) partials — salt derived from the
+    # row's monotonically_increasing_id, NOT the key (salting the key
+    # itself would be a no-op for duplicates of the same key... the
+    # point is spreading rows of ONE hot key over many reducers)
     salted = base.withColumn(
         "__salt", F.pmod(F.monotonically_increasing_id(), F.lit(salt_buckets))
     )

@@ -7,13 +7,31 @@ two; on a real cluster every knob here is overridable via
 ``extra_conf`` or spark-submit conf. AQE stays on so skewed
 aggregations/joins re-plan at runtime; Arrow is on because every
 kernel path is Arrow-batched.
+
+PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.
+enabled``) is off: with it on, every ``pyspark.sql.functions`` call
+captures the Python stack and makes several py4j round trips to record
+it, which costs a measurable share of planning a wide validation pass.
+The trade-off is that an ``AnalysisException`` no longer carries the
+Python call-site fragment; pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to get it back while debugging.
+
+Small driver-side tables (dimension tables, drift findings, checkpoint
+state rows) are built with :func:`local_frame`, which ships them as
+Arrow so the plan holds a JVM ``LocalRelation``. A Python list passed
+to ``createDataFrame`` becomes a ``LogicalRDD`` over a Python RDD
+instead, which starts Python workers every time the plan runs.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def _default_driver_memory() -> str:
@@ -82,9 +100,47 @@ def get_spark(
         # any production shuffle with R > 200 uses anyway, so this
         # aligns local behavior with scale instead of diverging from it
         .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` that executes in the JVM only.
+
+    Same rows and schema as ``spark.createDataFrame(list(rows), schema)``
+    (``schema`` a DDL string or StructType; rows tuples, dicts or Rows),
+    but the rows travel as an Arrow table and the plan holds a
+    ``LocalRelation``, so running it starts no Python worker. Values go
+    through the schema's own ``toInternal`` first, so a naive
+    ``datetime`` is read as system-local time exactly as on the list
+    path. Raises ``ValueError`` on the one input the Arrow path cannot
+    carry with pyarrow < 17: a null map whose keys or values are nested
+    or timestamps (pyspark rebuilds such a map column without its null
+    mask, SPARK-48302, so the null would arrive as an empty map)."""
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    internal = [struct.toInternal(r) for r in rows]
+    columns = list(zip(*internal)) if internal else [()] * len(struct.fields)
+    arrays = [pa.array(c, f.type) for c, f in zip(columns, arrow)]
+    if int(pa.__version__.split(".")[0]) < 17 and any(map(_has_rebuilt_null_map, arrays)):
+        raise ValueError(
+            "local_frame: a null map with nested or timestamp keys/values needs pyarrow >= 17"
+        )
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), struct)
+
+
+def _has_rebuilt_null_map(arr: pa.Array) -> bool:
+    t = arr.type
+    if pa.types.is_map(t):
+        rebuilt = any(pa.types.is_nested(x) or pa.types.is_timestamp(x) for x in (t.key_type, t.item_type))
+        return (rebuilt and arr.null_count > 0) or any(map(_has_rebuilt_null_map, (arr.keys, arr.items)))
+    if pa.types.is_list(t):
+        return _has_rebuilt_null_map(arr.flatten())
+    if pa.types.is_struct(t):
+        return any(_has_rebuilt_null_map(arr.field(i)) for i in range(t.num_fields))
+    return False

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.drift import _hist_dict, ks_statistic, psi
+from ..session import local_frame
 
 
 def windowed_histogram(
@@ -95,7 +96,8 @@ def drift_scores(
         if rows:
             # idempotent: a replayed micro-batch (foreachBatch is
             # at-least-once) overwrites its own epoch partition
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 rows,
                 "window_start timestamp, window_end timestamp, column string, ks double, psi double",
             ).coalesce(1).write.mode("overwrite").parquet(

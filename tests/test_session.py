@@ -53,3 +53,26 @@ def test_env_and_extra_conf_override_defaults(options, monkeypatch):
     assert options["spark.master"] == "local[3]"
     get_spark(extra_conf={"spark.driver.memory": "1g"})
     assert options["spark.driver.memory"] == "1g"
+
+
+_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def test_call_site_capture_off_by_default(options):
+    get_spark()
+    assert options[_DEBUGGING] == "false"
+
+
+def test_extra_conf_turns_call_site_capture_back_on(options):
+    get_spark(extra_conf={_DEBUGGING: "true"})
+    assert options[_DEBUGGING] == "true"
+
+
+def test_live_session_skips_call_site_capture(spark, monkeypatch):
+    """PySpark reads the flag once per process and, with it off, skips
+    the call-site capture on every ``functions`` call."""
+    from pyspark.errors import utils
+
+    assert spark.conf.get(_DEBUGGING) == "false"
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    assert utils.is_debugging_enabled() is False
