@@ -35,6 +35,7 @@ from pyspark.sql import types as ST
 
 from .errors import VIOLATION_DDL
 from .schema import FieldDef, Schema
+from .session import python_kernel
 from .types import DATE_ISO_RE_JAVA, DATETIME_ISO_RE_JAVA, UUID_RE_JAVA, type_name as py_type_name
 
 VSTRUCT_DDL = "struct<path:array<string>,code:string,message:string,context:map<string,string>>"
@@ -870,6 +871,7 @@ def _custom_validator_udf(validators: list[Callable]):
     fns = list(validators)
 
     @F.pandas_udf("string")
+    @python_kernel
     def _run(s: pd.Series) -> pd.Series:
         msgs = pd.Series([None] * len(s), index=s.index, dtype=object)
         pending = s.notna()

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..errors import VIOLATION_DDL
+from ..session import python_kernel
 from . import codecs
 from .synth import expected_caption, phash64, render_reference
 
@@ -157,4 +158,4 @@ def decode_violations(
             if rows:
                 yield pd.DataFrame(rows)
 
-    return df.select(*cols).mapInPandas(run, VIOLATION_DDL)
+    return df.select(*cols).mapInPandas(python_kernel(run), VIOLATION_DDL)

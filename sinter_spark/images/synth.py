@@ -23,6 +23,7 @@ import hashlib
 import numpy as np
 import pandas as pd
 
+from ..session import python_kernel
 from . import codecs
 
 IMAGE_DDL = (
@@ -244,7 +245,7 @@ def generate_images(
             rows = [make_row(seed, int(i), max_dim, fmt_mix) for i in pdf["id"]]
             yield pd.DataFrame(rows)
 
-    return base.mapInPandas(gen, IMAGE_DDL)
+    return base.mapInPandas(python_kernel(gen), IMAGE_DDL)
 
 
 def fmt_dim(spark):

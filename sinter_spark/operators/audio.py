@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..images.codecs import DecodeError
+from ..session import python_kernel
 
 
 def encode_wav(samples: np.ndarray, rate: int = 16_000) -> bytes:
@@ -183,4 +184,6 @@ def decode_audio_features(
                 out.append(rec)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, bytes_col, fmt_col).mapInPandas(run, AUDIO_FEATURES_DDL)
+    return df.select(id_col, bytes_col, fmt_col).mapInPandas(
+        python_kernel(run), AUDIO_FEATURES_DDL
+    )

@@ -54,6 +54,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import python_kernel
 from .text import fingerprint, normalized_text
 
 #: bitmap chunk size for the distributed OR-combine (bytes)
@@ -297,9 +298,9 @@ def build_bloom(
                 schema=chunk_schema,
             )
 
-    chunks = hashed.mapInArrow(_partition_bitmap, "chunk_id int, bits binary")
+    chunks = hashed.mapInArrow(python_kernel(_partition_bitmap), "chunk_id int, bits binary")
     combined = chunks.repartition(max(1, n_chunks), "chunk_id").mapInArrow(
-        _or_chunks, "chunk_id int, bits binary"
+        python_kernel(_or_chunks), "chunk_id int, bits binary"
     )
     bits = np.zeros(n_bytes, dtype=np.uint8)
     for row in combined.collect():
@@ -354,6 +355,7 @@ def dedup_against(
     bc = spark.sparkContext.broadcast((bloom.bits, bloom.k))
 
     @F.pandas_udf("boolean")
+    @python_kernel
     def _might_contain(h1, h2):
         import pandas as pd
 

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import python_kernel
 from .uniqueness import duplicate_keys  # noqa: F401  (re-export: exact dedup)
 from .text import fingerprint
 
@@ -184,7 +185,9 @@ def minhash_signatures_arrow(
     from ..plans import widen_small_scan
 
     return widen_small_scan(pruned).mapInArrow(
-        _minhash_arrow_kernel([id_col], text_idx=1, k=k, n_hashes=n_hashes, A=A, B=B),
+        python_kernel(
+            _minhash_arrow_kernel([id_col], text_idx=1, k=k, n_hashes=n_hashes, A=A, B=B)
+        ),
         out_schema,
     )
 
@@ -444,8 +447,10 @@ def grouped_bucket_pairs(
     if pair_mode == "weighted":
         out_schema += ", _w bigint"
     pairs = small.mapInArrow(
-        _pair_explode_kernel(
-            has_weight=(pair_mode == "weighted"), is_struct=bool(extra_col)
+        python_kernel(
+            _pair_explode_kernel(
+                has_weight=(pair_mode == "weighted"), is_struct=bool(extra_col)
+            )
         ),
         out_schema,
     )
@@ -994,7 +999,9 @@ def simhash_arrow(
 
     from ..plans import widen_small_scan
 
-    return widen_small_scan(pruned).mapInArrow(_simhash_arrow_kernel(id_col), out_schema)
+    return widen_small_scan(pruned).mapInArrow(
+        python_kernel(_simhash_arrow_kernel(id_col)), out_schema
+    )
 
 
 def _simhash_arrow_kernel(id_col: str):

@@ -37,7 +37,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..session import local_frame
+from ..session import local_frame, python_kernel
 from .similarity import cosine
 
 
@@ -130,10 +130,10 @@ def _default_training_sample(df: DataFrame, vec_col: str, sample_size: int):
 
         return _kernel
 
-    pdf = rows_df.mapInArrow(_heads(0, quota), ddl).toPandas()
+    pdf = rows_df.mapInArrow(python_kernel(_heads(0, quota)), ddl).toPandas()
     if len(pdf) < sample_size:
         short = sample_size - len(pdf)
-        extra = rows_df.mapInArrow(_heads(quota, short), ddl).toPandas()
+        extra = rows_df.mapInArrow(python_kernel(_heads(quota, short)), ddl).toPandas()
         pdf = pd.concat([pdf, extra], ignore_index=True)
     pdf = pdf.sort_values("_rank", kind="stable", ignore_index=True)
     return pdf[vec_col].iloc[:sample_size]
@@ -269,7 +269,7 @@ def assign_clusters(
                 list(batch.columns) + [pa.array(cid, type=pa.int32())], names=names
             )
 
-    return df.mapInArrow(_kernel, out_schema)
+    return df.mapInArrow(python_kernel(_kernel), out_schema)
 
 
 def probe_clusters(centroids: np.ndarray, query_vec, n_probe: int) -> list[int]:
@@ -427,7 +427,7 @@ def ivf_topk_batch(
 
     from ..plans import widen_small_scan
 
-    cand = widen_small_scan(pruned).mapInArrow(_kernel, out_schema)
+    cand = widen_small_scan(pruned).mapInArrow(python_kernel(_kernel), out_schema)
     sim = F.round(F.col("_sim"), round_to) if round_to is not None else F.col("_sim")
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
     return (

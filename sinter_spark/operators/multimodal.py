@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..images import codecs
 from ..images.perceptual import dct_phash64
+from ..session import python_kernel
 
 IMAGE_FEATURES_DDL = (
     "row_key string, ok boolean, err string, dec_w int, dec_h int, "
@@ -104,7 +105,9 @@ def decode_image_features(
             pdf_out["phash64"] = pd.array([r["phash64"] for r in out], dtype="Int64")
             yield pdf_out
 
-    return df.select(id_col, bytes_col, fmt_col).mapInPandas(run, IMAGE_FEATURES_DDL)
+    return df.select(id_col, bytes_col, fmt_col).mapInPandas(
+        python_kernel(run), IMAGE_FEATURES_DDL
+    )
 
 
 def image_near_dup_pairs(
@@ -188,7 +191,7 @@ def resize_images(
                 out.append(rec)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, bytes_col, fmt_col).mapInPandas(run, RESIZE_DDL)
+    return df.select(id_col, bytes_col, fmt_col).mapInPandas(python_kernel(run), RESIZE_DDL)
 
 
 FRAME_SAMPLE_DDL = (
@@ -312,4 +315,4 @@ def sample_video_frames(
                 )
                 yield pdf_out
 
-    return df.select(*cols).mapInPandas(run, FRAME_SAMPLE_DDL)
+    return df.select(*cols).mapInPandas(python_kernel(run), FRAME_SAMPLE_DDL)

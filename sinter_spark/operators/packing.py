@@ -49,6 +49,7 @@ from typing import Mapping
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import python_kernel
 from .text import token_count
 
 #: Lehmer / MINSTD constants: modulus 2^31-1 (prime), multiplier 48271.
@@ -302,7 +303,7 @@ def pack_documents(
                 }
             )
 
-    packed = base.mapInPandas(_cumsum, schema=out_schema)
+    packed = base.mapInPandas(python_kernel(_cumsum), schema=out_schema)
     c = int(chunk_tokens)
     return packed.select(
         F.col(id_col),

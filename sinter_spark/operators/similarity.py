@@ -18,6 +18,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import python_kernel
+
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -166,7 +168,7 @@ def cosine_topk_batch(
 
     from ..plans import widen_small_scan
 
-    cand = widen_small_scan(pruned).mapInArrow(_kernel, out_schema)
+    cand = widen_small_scan(pruned).mapInArrow(python_kernel(_kernel), out_schema)
     sim = F.round(F.col("_sim"), round_to) if round_to is not None else F.col("_sim")
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
     return (

@@ -24,6 +24,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import python_kernel
+
 P = 12
 M = 1 << P  # registers
 
@@ -105,7 +107,7 @@ def hll_by_bucket(df: DataFrame, key: str, bucket_col: str = "ckpt_bucket") -> D
         )
 
     return hashed.groupBy(bucket_col).applyInPandas(
-        fold, "bucket int, n_rows bigint, sketch binary"
+        python_kernel(fold), "bucket int, n_rows bigint, sketch binary"
     )
 
 

@@ -24,17 +24,18 @@ are hashed as ONE concatenated byte buffer, winnow windows evaluated
 with a single strided-view argmin, windows that would cross a doc
 boundary masked out; no per-doc Python loop), then a JOIN-FREE pair
 derivation: one ``groupBy(fp)`` collects each fingerprint's member
-array and the (a < b) pairs explode bucket-locally with array HOFs —
-only documents sharing a fingerprint ever meet, and the fingerprint
-table is never shuffled twice. A fingerprint shared by more than
-``max_bucket`` docs (ubiquitous boilerplate) is dropped AND reported
-via ``dedup.dropped_mass``.
+array and the (a < b) pairs explode bucket-locally in the Arrow
+``dedup._pair_explode_kernel`` — only documents sharing a fingerprint
+ever meet, and the fingerprint table is never shuffled twice. A
+fingerprint shared by more than ``max_bucket`` docs (ubiquitous
+boilerplate) is dropped AND reported via ``dedup.dropped_mass``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import python_kernel
 from .dedup import _attach_cache, _attach_drop_audit
 
 
@@ -75,7 +76,7 @@ def winnow_fingerprints(
     from ..plans import widen_small_scan
 
     return widen_small_scan(pruned).mapInArrow(
-        _winnow_arrow_kernel(id_col, k=k, window=window), out_schema
+        python_kernel(_winnow_arrow_kernel(id_col, k=k, window=window)), out_schema
     )
 
 
@@ -182,15 +183,15 @@ def substring_overlap_pairs(
     candidates with structural recall for shared runs ≥ w + k − 1
     bytes (each such run contributes ≥ 1 shared fingerprint).
 
-    Self-join-free shape (v4, via :func:`dedup.grouped_bucket_pairs`;
-    v5 concentration-proofed): the (id, fp) member table is dedup'd
-    and counted per fingerprint, oversized fingerprints (ubiquitous
-    boilerplate — a quadratic pair bomb) are dropped by a broadcast
-    anti-join BEFORE the member arrays aggregate (no degenerate
-    fingerprint ever concentrates its membership in one aggregation
-    state), and the (a < b) pairs explode BUCKET-LOCALLY — no
-    self-join, so the fingerprint table is neither shuffled twice nor
-    recomputed per join side. Dropped fingerprints are reported via
+    Self-join-free shape (via :func:`dedup.grouped_bucket_pairs`): one
+    exchange, then a ``dense_rank`` window per fingerprint so the
+    aggregate counts its distinct members exactly but collects at most
+    ``max_bucket`` of them (no degenerate fingerprint concentrates its
+    membership in one aggregation state), oversized fingerprints
+    (ubiquitous boilerplate — a quadratic pair bomb) filtered out, and
+    the (a < b) pairs exploded BUCKET-LOCALLY by the Arrow pair kernel
+    — no self-join, so the fingerprint table is neither shuffled twice
+    nor recomputed per join side. Dropped fingerprints are reported via
     ``dedup.dropped_mass`` ("no silent caps"); with ``cache`` the
     member table is persisted so the audit re-reads it (release with
     ``dedup.release_cache``).

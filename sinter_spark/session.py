@@ -22,11 +22,31 @@ state rows) are built with :func:`local_frame`, which ships them as
 Arrow so the plan holds a JVM ``LocalRelation``. A Python list passed
 to ``createDataFrame`` becomes a ``LogicalRDD`` over a Python RDD
 instead, which starts Python workers every time the plan runs.
+
+Every function handed to a Python worker (``mapInArrow`` and
+``mapInPandas`` kernels, ``applyInPandas[WithState]`` functions,
+``pandas_udf`` bodies) goes through :func:`python_kernel`. pyspark
+calls ``importlib.invalidate_caches()`` at the start of every task,
+and on CPython < 3.13 each ``zipimporter`` answers by re-parsing its
+archive's whole central directory; a reused worker holds a dozen such
+importers over ``pyspark.zip`` and the Spark and py4j archives, so each
+task paid a fixed 150-440 ms (measured on a 4-core host) before the
+kernel's first line ran. The wrapper's first call in a worker replaces that method with
+one that re-reads an archive only when its mtime or size changed, so a
+changed archive is still re-read. CPython 3.13 makes the invalidation
+lazy and the wrapper does nothing there. There is no option: the old
+behaviour costs time and buys nothing. The first task in each new
+worker still pays once, because pyspark invalidates before the wrapper
+has run.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
+import sys
+import zipimport
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -144,3 +164,65 @@ def _has_rebuilt_null_map(arr: pa.Array) -> bool:
     if pa.types.is_struct(t):
         return any(_has_rebuilt_null_map(arr.field(i)) for i in range(t.num_fields))
     return False
+
+
+def python_kernel(fn):
+    """``fn`` for a Python worker, with the worker's zip-import caches
+    stamped (see the module docstring) before its first call.
+
+    ``functools.wraps`` plus ``__signature__``, so ``inspect``, pyspark's
+    argument-count checks and pandas type hints see ``fn`` itself. After
+    the first call in a process each call costs one flag check."""
+
+    @functools.wraps(fn)
+    def kernel(*args, **kwargs):
+        _stamp_zip_caches()
+        return fn(*args, **kwargs)
+
+    kernel.__signature__ = inspect.signature(fn)
+    return kernel
+
+
+#: archive path → (st_mtime_ns, st_size) when this process last read it
+_ZIP_STAMPS: dict[str, tuple[int, int]] = {}
+
+
+def _stamp_zip_caches() -> None:
+    """Install the stamped ``zipimporter.invalidate_caches`` once per
+    process (CPython < 3.13 only). Archives already cached are stamped as
+    read now: in a worker, pyspark re-read all of them at the start of
+    the task that makes this first call."""
+    if zipimport.zipimporter.invalidate_caches is _stamped_invalidate or sys.version_info >= (3, 13):
+        return
+    for archive in list(zipimport._zip_directory_cache):
+        try:
+            _ZIP_STAMPS[archive] = _stat_stamp(archive)
+        except OSError:
+            pass
+    zipimport.zipimporter.invalidate_caches = _stamped_invalidate
+
+
+def _stat_stamp(path: str) -> tuple[int, int]:
+    st = os.stat(path)
+    return st.st_mtime_ns, st.st_size
+
+
+_read_invalidate = zipimport.zipimporter.invalidate_caches
+
+
+def _stamped_invalidate(self) -> None:
+    """``zipimporter.invalidate_caches`` that skips the re-read while the
+    archive's (mtime, size) matches what this process last read."""
+    try:
+        stamp = _stat_stamp(self.archive)
+    except OSError:
+        stamp = None
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if stamp is not None and files is not None and _ZIP_STAMPS.get(self.archive) == stamp:
+        self._files = files
+        return
+    _read_invalidate(self)
+    if stamp is not None and self.archive in zipimport._zip_directory_cache:
+        _ZIP_STAMPS[self.archive] = stamp
+    else:
+        _ZIP_STAMPS.pop(self.archive, None)

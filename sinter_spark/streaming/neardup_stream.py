@@ -52,6 +52,7 @@ from ..operators.dedup import (
     _minhash_arrow_kernel,
     _shingle_array,
 )
+from ..session import python_kernel
 
 
 def minhash_signatures_stream(
@@ -84,7 +85,7 @@ def minhash_signatures_stream(
     kernel = _minhash_arrow_kernel(
         cols, text_idx=text_idx, k=k, n_hashes=n_hashes, A=A, B=B
     )
-    return pruned.mapInArrow(kernel, f"{ddl}, sig array<bigint>")
+    return pruned.mapInArrow(python_kernel(kernel), f"{ddl}, sig array<bigint>")
 
 
 def _jaccard(a: Column, b: Column) -> Column:

@@ -26,6 +26,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..binding import bind
 from ..schema import Schema
+from ..session import python_kernel
 
 ALARM_DDL = "key string, streak int, total_bad bigint, event_count bigint"
 _STATE_DDL = "streak int, total_bad long"
@@ -116,7 +117,7 @@ def violation_streaks(
         else GroupStateTimeout.NoTimeout
     )
     return marked.groupBy("key").applyInPandasWithState(
-        update,
+        python_kernel(update),
         outputStructType=ALARM_DDL,
         stateStructType=_STATE_DDL,
         outputMode="append",
