@@ -14,7 +14,8 @@ session the launcher created):
         --output  /tmp/run1 \
         --checkpoint /tmp/ckpt --run-id nightly   # resumable
 
-Commands:
+Commands (each also writes ``metrics.json`` under ``--output``, with
+``command`` naming the subcommand and ``elapsed_sec``):
 
 * ``validate`` — one schema-validation pass (:func:`binding.bind`):
   writes ``violations/`` (exploded rows: row_key, path, code, message,
@@ -24,6 +25,11 @@ Commands:
   :func:`checkpoint.run_checkpointed` in resumable bucket chunks with
   per-bucket lineage + HLL metrics — re-running the same ``--run-id``
   after a crash resumes from the first unfinished bucket.
+* ``validate-stream`` — the same pass over a file stream
+  (:func:`streaming.validate_stream.streaming_validate`, availableNow
+  trigger): drains the files ``--stream-checkpoint`` has not seen yet,
+  adds their violations to ``violations/`` as ``epoch_id=N``
+  partitions and exits; ``metrics.json`` counts the whole sink.
 * ``stats`` — one-pass column stats (:func:`operators.stats.column_stats`)
   to ``stats/`` parquet + ``metrics.json``.
 * ``infer`` — schema inference over a table sample
@@ -67,6 +73,7 @@ callables and therefore library-only.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
@@ -85,14 +92,25 @@ def _get_spark(cores: str | None):
     return get_spark(cores=cores, app_name="sinter_cli")
 
 
-def _read(spark, path: str, fmt: str, csv_header: bool):
-    if fmt == "parquet":
-        return spark.read.parquet(path)
-    if fmt == "csv":
-        return spark.read.option("header", str(csv_header).lower()).csv(path)
-    if fmt == "json":
-        return spark.read.json(path)
-    raise SystemExit(f"unsupported --format {fmt!r} (parquet|csv|json)")
+def _read(reader, path: str, args):
+    """Read ``path`` in ``--format`` through ``reader``: ``spark.read``
+    or a ``spark.readStream.schema(...)``."""
+    if args.format == "parquet":
+        return reader.parquet(path)
+    if args.format == "csv":
+        return reader.option("header", str(args.csv_header).lower()).csv(path)
+    if args.format == "json":
+        return reader.json(path)
+    raise SystemExit(f"unsupported --format {args.format!r} (parquet|csv|json)")
+
+
+def _commit(df, out: str, name: str):
+    """Write ``df`` as parquet to ``out/name`` and return the written
+    files as a frame, so later counts and stages scan the committed
+    output instead of recomputing ``df``'s plan."""
+    path = os.path.join(out, name)
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
 
 
 def _load_schema(path: str):
@@ -109,18 +127,48 @@ def _write_metrics(out_dir: str, metrics: dict) -> None:
     print(json.dumps(metrics, default=str))
 
 
-def cmd_validate(args) -> int:
+def _job(fn):
+    """Turn a command body ``fn(args, spark) -> (metrics, rc)`` into the
+    ``(args) -> rc`` command: get the session (the active one under
+    spark-submit), time the body, write ``--output``/``metrics.json`` as
+    ``{"command": <name>, **metrics, "elapsed_sec": ...}`` and return
+    ``rc``. ``<name>`` is the subcommand, taken from the function name
+    (``cmd_ivf_build`` → ``ivf-build``).
+
+    ``elapsed_sec`` starts once the session is up, so it also covers
+    the body's lazy input-read setup (file listing, schema inference).
+    A body that raises writes no metrics."""
+    command = fn.__name__.removeprefix("cmd_").replace("_", "-")
+
+    @functools.wraps(fn)
+    def run(args) -> int:
+        spark = _get_spark(args.cores)
+        t0 = time.perf_counter()
+        metrics, rc = fn(args, spark)
+        _write_metrics(
+            args.output,
+            {
+                "command": command,
+                **metrics,
+                "elapsed_sec": round(time.perf_counter() - t0, 3),
+            },
+        )
+        return rc
+
+    return run
+
+
+@_job
+def cmd_validate(args, spark):
     if args.checkpoint and not args.row_key:
         raise SystemExit("--checkpoint needs --row-key (the bucket lineage key)")
     from .binding import bind
 
-    spark = _get_spark(args.cores)
     schema = _load_schema(args.schema)
-    df = _read(spark, args.input, args.format, args.csv_header)
-    t0 = time.perf_counter()
+    df = _read(spark.read, args.input, args)
 
     if args.checkpoint:
-        from .checkpoint import CheckpointStore, read_violations, run_checkpointed
+        from .checkpoint import CheckpointStore, global_distinct, read_violations, run_checkpointed
 
         store = CheckpointStore(spark, args.checkpoint)
         run_id = run_checkpointed(
@@ -136,54 +184,38 @@ def cmd_validate(args) -> int:
         )
         viol = read_violations(store, run_id)
         viol.write.mode("overwrite").parquet(os.path.join(args.output, "violations"))
-        from .checkpoint import global_distinct
-
         agg = store.metrics(run_id).groupBy().sum("rows", "violations").collect()[0]
         metrics = {
-            "command": "validate",
             "mode": "checkpointed",
             "run_id": run_id,
             "rows": agg["sum(rows)"],
             "violations": agg["sum(violations)"],
             "approx_distinct_keys": global_distinct(store, run_id),
             "buckets_done": len(store.done_buckets(run_id)),
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
         }
     else:
         res = bind(schema, df, row_key=args.row_key, coerce=args.coerce)
         m = res.write_parquet(args.output)  # violations/ + verdicts/ + metrics.json
-        metrics = {
-            "command": "validate",
-            "mode": "single-pass",
-            **m,
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
-        }
-    _write_metrics(args.output, metrics)
-    return 0 if not args.fail_on_violations or not metrics.get("violations") else 2
+        metrics = {"mode": "single-pass", **m}
+    return metrics, 0 if not args.fail_on_violations or not metrics.get("violations") else 2
 
 
-def cmd_validate_stream(args) -> int:
+@_job
+def cmd_validate_stream(args, spark):
+    from pyspark.errors import AnalysisException
+
     from .streaming.validate_stream import streaming_validate
 
-    spark = _get_spark(args.cores)
     schema = _load_schema(args.schema)
     # streaming sources need an explicit schema: take it from a static
     # read of the same path (metadata-only for parquet)
-    static_schema = _read(spark, args.input, args.format, args.csv_header).schema
-    reader = spark.readStream.schema(static_schema)
+    reader = spark.readStream.schema(_read(spark.read, args.input, args).schema)
     if args.max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", args.max_files_per_trigger)
-    if args.format == "parquet":
-        sdf = reader.parquet(args.input)
-    elif args.format == "json":
-        sdf = reader.json(args.input)
-    else:
-        sdf = reader.option("header", str(args.csv_header).lower()).csv(args.input)
     sink = os.path.join(args.output, "violations")
-    t0 = time.perf_counter()
     q = streaming_validate(
         schema,
-        sdf,
+        _read(reader, args.input, args),
         row_key=args.row_key,
         violations_sink=sink,
         checkpoint_dir=args.stream_checkpoint,
@@ -192,28 +224,22 @@ def cmd_validate_stream(args) -> int:
     q.awaitTermination()
     try:
         viol = spark.read.parquet(sink)
+    except AnalysisException:
+        # [PATH_NOT_FOUND]: no batch has ever run, so nothing was written
+        # (a batch without violations still writes its empty epoch)
+        n_viol, epochs = 0, 0
+    else:
         n_viol = viol.count()
         epochs = viol.select("epoch_id").distinct().count()
-    except Exception:
-        n_viol, epochs = 0, 0  # no violations ever written → empty sink
-    _write_metrics(
-        args.output,
-        {
-            "command": "validate-stream",
-            "violations": n_viol,
-            "epochs": epochs,
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
-        },
-    )
-    return 0 if not args.fail_on_violations or n_viol == 0 else 2
+    metrics = {"violations": n_viol, "epochs": epochs}
+    return metrics, 0 if not args.fail_on_violations or n_viol == 0 else 2
 
 
-def cmd_infer(args) -> int:
+@_job
+def cmd_infer(args, spark):
     from .api import infer_schema_from_df, schema_to_dict
 
-    spark = _get_spark(args.cores)
-    df = _read(spark, args.input, args.format, args.csv_header)
-    t0 = time.perf_counter()
+    df = _read(spark.read, args.input, args)
     schema = infer_schema_from_df(
         df, sample=args.sample, min_occurrence_ratio=args.min_occurrence_ratio
     )
@@ -222,29 +248,23 @@ def cmd_infer(args) -> int:
     path = os.path.join(args.output, "schema.json")
     with open(path, "w") as f:
         json.dump(body, f, indent=2)
-    _write_metrics(
-        args.output,
-        {
-            "command": "infer",
-            "schema_file": path,
-            "fields": len(body["fields"]),
-            "required": sum(1 for s in body["fields"] if s[2].get("required")),
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
-        },
-    )
-    return 0
+    metrics = {
+        "schema_file": path,
+        "fields": len(body["fields"]),
+        "required": sum(1 for s in body["fields"] if s[2].get("required")),
+    }
+    return metrics, 0
 
 
-def cmd_drift(args) -> int:
+@_job
+def cmd_drift(args, spark):
     from pyspark.sql import functions as F
 
     from .operators.drift import drift_report, histogram
 
-    spark = _get_spark(args.cores)
-    cur = _read(spark, args.input, args.format, args.csv_header)
-    base = _read(spark, args.baseline, args.format, args.csv_header)
+    cur = _read(spark.read, args.input, args)
+    base = _read(spark.read, args.baseline, args)
     cols = args.cols.split(",")
-    t0 = time.perf_counter()
     # shared bin ranges spanning BOTH tables: one tiny agg per side
     # (global min/max — broadcast-sized metadata, not a data shuffle)
     aggs = [f(c).alias(f"{tag}_{c}") for c in cols for tag, f in (("lo", F.min), ("hi", F.max))]
@@ -267,86 +287,51 @@ def cmd_drift(args) -> int:
             out = out.unionByName(p)
         return out
 
-    hc, hb = hists(cur), hists(base)
-    hc.write.mode("overwrite").parquet(os.path.join(args.output, "hist_current"))
-    hb.write.mode("overwrite").parquet(os.path.join(args.output, "hist_baseline"))
     report = drift_report(
-        spark.read.parquet(os.path.join(args.output, "hist_current")),
-        spark.read.parquet(os.path.join(args.output, "hist_baseline")),
+        _commit(hists(cur), args.output, "hist_current"),
+        _commit(hists(base), args.output, "hist_baseline"),
         bins=args.bins,
         ks_threshold=args.ks_threshold,
         psi_threshold=args.psi_threshold,
     )
     drifted = [r["column"] for r in report if not (r["ks_pass"] and r["psi_pass"])]
-    _write_metrics(
-        args.output,
-        {
-            "command": "drift",
-            "report": report,
-            "drifted_columns": drifted,
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
-        },
-    )
-    return 2 if args.fail_on_drift and drifted else 0
+    metrics = {"report": report, "drifted_columns": drifted}
+    return metrics, 2 if args.fail_on_drift and drifted else 0
 
 
-def cmd_stats(args) -> int:
+@_job
+def cmd_stats(args, spark):
     from .operators.stats import column_stats
 
-    spark = _get_spark(args.cores)
-    df = _read(spark, args.input, args.format, args.csv_header)
+    df = _read(spark.read, args.input, args)
     cols = args.cols.split(",") if args.cols else None
-    t0 = time.perf_counter()
     st = column_stats(df, cols, approx=not args.exact)
-    st.write.mode("overwrite").parquet(os.path.join(args.output, "stats"))
-    rows = [r.asDict() for r in spark.read.parquet(os.path.join(args.output, "stats")).collect()]
-    _write_metrics(
-        args.output,
-        {
-            "command": "stats",
-            "columns": len(rows),
-            "stats": rows,
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
-        },
-    )
-    return 0
+    rows = [r.asDict() for r in _commit(st, args.output, "stats").collect()]
+    return {"columns": len(rows), "stats": rows}, 0
 
 
-def cmd_image_suite(args) -> int:
+@_job
+def cmd_image_suite(args, spark):
     from .images import fmt_dim, validate_images_full
 
-    spark = _get_spark(args.cores)
-    df = _read(spark, args.input, args.format, args.csv_header)
-    t0 = time.perf_counter()
+    df = _read(spark.read, args.input, args)
     res = validate_images_full(
         df, fmt_dim(spark), decode=not args.no_decode, check_caption=not args.no_caption
     )
-    res.violations.write.mode("overwrite").parquet(
-        os.path.join(args.output, "violations")
-    )
-    n_viol = spark.read.parquet(os.path.join(args.output, "violations")).count()
-    _write_metrics(
-        args.output,
-        {
-            "command": "image-suite",
-            "violations": n_viol,
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
-        },
-    )
-    return 0 if not args.fail_on_violations or n_viol == 0 else 2
+    n_viol = _commit(res.violations, args.output, "violations").count()
+    return {"violations": n_viol}, 0 if not args.fail_on_violations or n_viol == 0 else 2
 
 
-def cmd_dedup(args) -> int:
+@_job
+def cmd_dedup(args, spark):
     from pyspark.sql import functions as F
 
     from .operators import dedup as dd
 
-    spark = _get_spark(args.cores)
-    df = _read(spark, args.input, args.format, args.csv_header)
+    df = _read(spark.read, args.input, args)
     id_col, text_col = args.id_col, args.text_col
-    t0 = time.perf_counter()
     n_docs = df.count()
-    metrics: dict = {"command": "dedup", "method": args.method, "docs": n_docs}
+    metrics: dict = {"method": args.method, "docs": n_docs}
     losers = None  # (id_col) rows to drop for the canonical output
 
     if args.method == "exact":
@@ -360,14 +345,16 @@ def cmd_dedup(args) -> int:
         # --fail-on-dups on corpora whose only "duplicates" are NULLs.
         # Filter NULL fingerprints out of the whole derivation; the
         # rows still pass through to canonical/ untouched.
-        groups = dd.exact_dup_groups(df, text_col, id_col).where(
-            F.col("fp").isNotNull()
+        groups = _commit(
+            dd.exact_dup_groups(df, text_col, id_col).where(F.col("fp").isNotNull()),
+            args.output,
+            "groups",
         )
-        groups.write.mode("overwrite").parquet(os.path.join(args.output, "groups"))
-        groups = spark.read.parquet(os.path.join(args.output, "groups"))
-        metrics["dup_groups"] = groups.count()
-        metrics["dup_docs"] = (
-            groups.agg(F.coalesce(F.sum("n_docs"), F.lit(0))).collect()[0][0]
+        metrics.update(
+            groups.agg(
+                F.count(F.lit(1)).alias("dup_groups"),
+                F.coalesce(F.sum("n_docs"), F.lit(0)).alias("dup_docs"),
+            ).collect()[0].asDict()
         )
         if args.canonical:
             # keep the minimum id per fingerprint; losers = the rest.
@@ -403,10 +390,7 @@ def cmd_dedup(args) -> int:
             audit_src = pairs
         else:
             raise SystemExit(f"unknown --method {args.method!r}")
-        pairs.select("id_a", "id_b").write.mode("overwrite").parquet(
-            os.path.join(args.output, "pairs")
-        )
-        edge = spark.read.parquet(os.path.join(args.output, "pairs"))
+        edge = _commit(pairs.select("id_a", "id_b"), args.output, "pairs")
         metrics["pairs"] = edge.count()
         dropped = dd.dropped_mass(audit_src)
         metrics["dropped_buckets"] = dropped["n_buckets"]
@@ -417,35 +401,31 @@ def cmd_dedup(args) -> int:
             if args.algorithm == "label"
             else dd.connected_components_star
         )
-        comp = algo(edge)
-        comp.write.mode("overwrite").parquet(os.path.join(args.output, "components"))
-        comp = spark.read.parquet(os.path.join(args.output, "components"))
-        metrics["clustered_docs"] = comp.count()
-        metrics["components"] = comp.select("component").distinct().count()
+        comp = _commit(algo(edge), args.output, "components")
+        metrics.update(
+            comp.agg(
+                F.count(F.lit(1)).alias("clustered_docs"),
+                F.count_distinct("component").alias("components"),
+            ).collect()[0].asDict()
+        )
         if args.canonical:
             losers = comp.where(F.col("node") != F.col("component")).select(
                 F.col("node").alias(id_col)
             )
 
     if losers is not None:
-        kept = df.join(losers, id_col, "left_anti")
-        kept.write.mode("overwrite").parquet(os.path.join(args.output, "canonical"))
-        metrics["kept_docs"] = spark.read.parquet(
-            os.path.join(args.output, "canonical")
-        ).count()
+        kept = _commit(df.join(losers, id_col, "left_anti"), args.output, "canonical")
+        metrics["kept_docs"] = kept.count()
         metrics["dropped_docs"] = n_docs - metrics["kept_docs"]
-    metrics["elapsed_sec"] = round(time.perf_counter() - t0, 3)
-    _write_metrics(args.output, metrics)
     dup_evidence = metrics.get("dup_groups", metrics.get("pairs", 0))
-    return 2 if args.fail_on_dups and dup_evidence else 0
+    return metrics, 2 if args.fail_on_dups and dup_evidence else 0
 
 
-def cmd_ivf_build(args) -> int:
+@_job
+def cmd_ivf_build(args, spark):
     from .operators import ivf
 
-    spark = _get_spark(args.cores)
-    df = _read(spark, args.input, args.format, args.csv_header)
-    t0 = time.perf_counter()
+    df = _read(spark.read, args.input, args)
     cents = ivf.train_centroids(
         df,
         args.vec_col,
@@ -455,25 +435,19 @@ def cmd_ivf_build(args) -> int:
     )
     ivf.write_ivf_index(df, cents, args.output, vec_col=args.vec_col)
     n_rows = spark.read.parquet(os.path.join(args.output, "data")).count()
-    _write_metrics(
-        args.output,
-        {
-            "command": "ivf-build",
-            "rows": n_rows,
-            "n_clusters": int(cents.shape[0]),
-            "dim": int(cents.shape[1]),
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
-        },
-    )
-    return 0
+    metrics = {
+        "rows": n_rows,
+        "n_clusters": int(cents.shape[0]),
+        "dim": int(cents.shape[1]),
+    }
+    return metrics, 0
 
 
-def cmd_ivf_query(args) -> int:
+@_job
+def cmd_ivf_query(args, spark):
     from .operators import ivf
 
-    spark = _get_spark(args.cores)
-    queries = _read(spark, args.queries, args.format, args.csv_header)
-    t0 = time.perf_counter()
+    queries = _read(spark.read, args.queries, args)
     cents = ivf.read_centroids(spark, args.index)
     data = spark.read.parquet(os.path.join(args.index, "data"))
     out = ivf.ivf_topk_batch(
@@ -489,31 +463,23 @@ def cmd_ivf_query(args) -> int:
         n_probe=args.n_probe,
         assigned=True,
     )
-    out.write.mode("overwrite").parquet(os.path.join(args.output, "results"))
-    res = spark.read.parquet(os.path.join(args.output, "results"))
-    _write_metrics(
-        args.output,
-        {
-            "command": "ivf-query",
-            "queries": queries.count(),
-            "result_rows": res.count(),
-            "k": args.k,
-            "n_probe": args.n_probe,
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
-        },
-    )
-    return 0
+    metrics = {
+        "queries": queries.count(),
+        "result_rows": _commit(out, args.output, "results").count(),
+        "k": args.k,
+        "n_probe": args.n_probe,
+    }
+    return metrics, 0
 
 
-def cmd_decontam(args) -> int:
+@_job
+def cmd_decontam(args, spark):
     from pyspark.sql import functions as F
 
     from .operators import decontam
 
-    spark = _get_spark(args.cores)
-    df = _read(spark, args.input, args.format, args.csv_header)
-    bench = _read(spark, args.benchmark, args.format, args.csv_header)
-    t0 = time.perf_counter()
+    df = _read(spark.read, args.input, args)
+    bench = _read(spark.read, args.benchmark, args)
     report = decontam.contamination(
         df,
         bench,
@@ -523,8 +489,7 @@ def cmd_decontam(args) -> int:
         min_matches=args.min_matches,
         min_ratio=args.min_ratio,
     )
-    report.write.mode("overwrite").parquet(os.path.join(args.output, "report"))
-    report = spark.read.parquet(os.path.join(args.output, "report"))
+    report = _commit(report, args.output, "report")
     bad = report.where(F.col("contaminated")).select(args.id_col)
     clean = df.join(bad, args.id_col, "left_anti")
     clean.write.mode("overwrite").parquet(os.path.join(args.output, "clean"))
@@ -535,32 +500,21 @@ def cmd_decontam(args) -> int:
         ).alias("bad"),
     ).collect()[0]
     n_docs, n_bad = int(agg["docs"]), int(agg["bad"])
-    _write_metrics(
-        args.output,
-        {
-            "command": "decontam",
-            "n": args.n,
-            "docs": n_docs,
-            "contaminated_docs": n_bad,
-            "kept_docs": n_docs - n_bad,
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
-        },
-    )
-    return 2 if args.fail_on_contamination and n_bad else 0
+    metrics = {
+        "n": args.n,
+        "docs": n_docs,
+        "contaminated_docs": n_bad,
+        "kept_docs": n_docs - n_bad,
+    }
+    return metrics, 2 if args.fail_on_contamination and n_bad else 0
 
 
-def cmd_dedup_against(args) -> int:
+@_job
+def cmd_dedup_against(args, spark):
     from .operators import bloom
 
-    if args.no_bloom and (args.bloom_in or args.bloom_out):
-        raise SystemExit(
-            "--no-bloom contradicts --bloom-in/--bloom-out: the plain "
-            "anti-join neither uses nor builds a filter"
-        )
-    spark = _get_spark(args.cores)
-    df = _read(spark, args.input, args.format, args.csv_header)
-    ref = _read(spark, args.reference, args.format, args.csv_header)
-    t0 = time.perf_counter()
+    df = _read(spark.read, args.input, args)
+    ref = _read(spark.read, args.reference, args)
     flt = None
     bloom_in_prov: dict | None = None
     if args.bloom_in:
@@ -600,23 +554,17 @@ def cmd_dedup_against(args) -> int:
         fpr=args.fpr,
         bloom=flt,
     )
-    kept.write.mode("overwrite").parquet(os.path.join(args.output, "clean"))
+    n_kept = _commit(kept, args.output, "clean").count()
     n_docs = df.count()
-    n_kept = spark.read.parquet(os.path.join(args.output, "clean")).count()
-    _write_metrics(
-        args.output,
-        {
-            "command": "dedup-against",
-            "docs": n_docs,
-            "kept_docs": n_kept,
-            "dropped_docs": n_docs - n_kept,
-            "bloom": not args.no_bloom,
-            "fpr": args.fpr,
-            **({"bloom_in": bloom_in_prov} if bloom_in_prov is not None else {}),
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
-        },
-    )
-    return 0
+    metrics = {
+        "docs": n_docs,
+        "kept_docs": n_kept,
+        "dropped_docs": n_docs - n_kept,
+        "bloom": not args.no_bloom,
+        "fpr": args.fpr,
+        **({"bloom_in": bloom_in_prov} if bloom_in_prov is not None else {}),
+    }
+    return metrics, 0
 
 
 def _parse_kv(spec: str, cast):
@@ -635,7 +583,8 @@ def _parse_kv(spec: str, cast):
     return out
 
 
-def cmd_pipeline(args) -> int:
+@_job
+def cmd_pipeline(args, spark):
     """The composed training-data pass: quality filter → scrub →
     near-dup dedup → reference dedup → benchmark decontamination →
     mixing/quota sampling → sequence packing, each stage optional,
@@ -652,10 +601,8 @@ def cmd_pipeline(args) -> int:
     from .operators.bloom import dedup_against
     from .operators.dedup import dedup_canonical
 
-    spark = _get_spark(args.cores)
-    df = _read(spark, args.input, args.format, args.csv_header)
+    df = _read(spark.read, args.input, args)
     id_col, text_col = args.id_col, args.text_col
-    t0 = time.perf_counter()
     stages: list[dict] = []
     # id_col hygiene up front (ADVICE r5): the quality stage's
     # left_semi and the scrub stage's inner join rejoin on id_col with
@@ -682,31 +629,25 @@ def cmd_pipeline(args) -> int:
             f"{n} rows) — stage rejoins would fan out duplicated ids"
         )
 
-    def _stage_committed(name: str) -> bool:
-        """True when --resume can reuse stage_<next-index>_<name>."""
-        path = os.path.join(args.output, f"stage_{len(stages)}_{name}")
-        return bool(
-            getattr(args, "resume", False)
-            and os.path.exists(os.path.join(path, "_SUCCESS"))
-        )
+    def _reuse_or_commit(rel: str, make_df):
+        """``(frame, resumed)`` for the output ``rel``. With --resume and
+        its parquet ``_SUCCESS`` marker present, the committed files are
+        read back instead of recomputed, so a crashed chain restarts
+        from the first unfinished output. make_df is a thunk: a resumed
+        output never pays plan construction side effects (e.g. the
+        Bloom build's jobs)."""
+        if args.resume and os.path.exists(os.path.join(args.output, rel, "_SUCCESS")):
+            return spark.read.parquet(os.path.join(args.output, rel)), True
+        return _commit(make_df(), args.output, rel), False
 
     def _stage(name: str, make_df, **extra):
         nonlocal df, n
         # materialize between stages: each stage's output feeds several
         # downstream scans (counts + next stage) — and keeps lineage
-        # shallow on long chains. With --resume, a stage whose output
-        # already committed (parquet _SUCCESS marker) is read back
-        # instead of recomputed — a crashed chain restarts from the
-        # first unfinished stage. Resume trusts the stage NAME+INDEX:
+        # shallow on long chains. Resume trusts the stage NAME+INDEX:
         # rerunning with different stage parameters must use a fresh
         # --output (documented on the flag).
-        path = os.path.join(args.output, f"stage_{len(stages)}_{name}")
-        resumed = _stage_committed(name)
-        if not resumed:
-            # make_df is a thunk: resumed stages never pay plan
-            # construction side effects (e.g. the Bloom build's jobs)
-            make_df().write.mode("overwrite").parquet(path)
-        df = spark.read.parquet(path)
+        df, resumed = _reuse_or_commit(f"stage_{len(stages)}_{name}", make_df)
         n_out = df.count()
         stages.append(
             {"stage": name, "rows_in": n, "rows_out": n_out, "resumed": resumed, **extra}
@@ -723,32 +664,31 @@ def cmd_pipeline(args) -> int:
         _stage("quality_filter", _quality, min_quality=args.min_quality)
 
     if args.scrub:
-        scrubbed = scrub.scrub_text(df, text_col, id_col)
-        audit = {}
-        if not _stage_committed("scrub"):
+        audit: dict = {}
+
+        def _scrub(df=df):
+            scrubbed = scrub.scrub_text(df, text_col, id_col)
             # ONE aggregation job for the whole audit — and none at all
-            # when --resume will reuse the committed stage output
+            # when --resume reuses the committed stage output
             cols = [c for c in scrubbed.columns if c.startswith("n_")]
             row = scrubbed.agg(*[F.sum(c).alias(c) for c in cols]).collect()[0]
-            audit = {f"total_{c}": row[c] for c in cols}
-        _stage(
-            "scrub",
-            lambda df=df: df.drop(text_col).join(
-                scrubbed.select(id_col, F.col("scrubbed").alias(text_col)),
-                id_col,
-            ),
-            **audit,
-        )
+            audit.update({f"total_{c}": row[c] for c in cols})
+            return df.drop(text_col).join(
+                scrubbed.select(id_col, F.col("scrubbed").alias(text_col)), id_col
+            )
+
+        _stage("scrub", _scrub)
+        stages[-1].update(audit)
 
     if args.dedup:
         _stage("dedup_canonical", lambda df=df: dedup_canonical(df, id_col, text_col))
 
     if args.reference:
-        ref = _read(spark, args.reference, args.format, args.csv_header)
+        ref = _read(spark.read, args.reference, args)
         _stage("dedup_against", lambda df=df: dedup_against(df, ref, text_col))
 
     if args.benchmark:
-        bench = _read(spark, args.benchmark, args.format, args.csv_header)
+        bench = _read(spark.read, args.benchmark, args)
         _stage(
             "decontaminate",
             lambda df=df: decontam.decontaminate(
@@ -775,29 +715,18 @@ def cmd_pipeline(args) -> int:
             ),
         )
 
-    def _committed(rel: str) -> bool:
-        return bool(
-            getattr(args, "resume", False)
-            and os.path.exists(os.path.join(args.output, rel, "_SUCCESS"))
-        )
-
-    docs_resumed = _committed("docs")
-    if not docs_resumed:
-        df.write.mode("overwrite").parquet(os.path.join(args.output, "docs"))
+    docs, _ = _reuse_or_commit("docs", lambda: df)
     if args.chunk_tokens:
-        pack_resumed = _committed("packed")
-        if not pack_resumed:
-            packed = packing.pack_documents(
-                spark.read.parquet(os.path.join(args.output, "docs")),
+        pk, pack_resumed = _reuse_or_commit(
+            "packed",
+            lambda: packing.pack_documents(
+                docs,
                 chunk_tokens=args.chunk_tokens,
                 id_col=id_col,
                 text_col=text_col,
                 shuffle_seed=args.shuffle_seed,
-            )
-            packed.write.mode("overwrite").parquet(
-                os.path.join(args.output, "packed")
-            )
-        pk = spark.read.parquet(os.path.join(args.output, "packed"))
+            ),
+        )
         # one aggregation: rows_out counts the PACKED rows (null-id
         # docs are excluded by pack_documents), and max(chunk_last) is
         # NULL on an empty pack — don't crash after the expensive job
@@ -819,24 +748,21 @@ def cmd_pipeline(args) -> int:
             }
         )
 
-    _write_metrics(
-        args.output,
-        {
-            "command": "pipeline",
-            "stages": stages,
-            "docs_out": n,
-            "elapsed_sec": round(time.perf_counter() - t0, 3),
-        },
-    )
-    return 0
+    return {"stages": stages, "docs_out": n}, 0
 
 
-def _common(p: argparse.ArgumentParser, *, schema: bool) -> None:
-    p.add_argument("--input", required=True, help="table path (parquet dir/file, csv, json)")
+def _job_flags(p: argparse.ArgumentParser) -> None:
+    """The flags every job takes: how its inputs are read, where its
+    outputs go, and the local session's cores."""
     p.add_argument("--format", default="parquet", choices=["parquet", "csv", "json"])
     p.add_argument("--csv-header", action="store_true", help="csv: first line is a header")
     p.add_argument("--output", required=True, help="output directory")
     p.add_argument("--cores", default=None, help="local session cores when not under spark-submit (default $SPARK_GRAFT_CPUS, else every host core)")
+
+
+def _common(p: argparse.ArgumentParser, *, schema: bool = False) -> None:
+    p.add_argument("--input", required=True, help="table path (parquet dir/file, csv, json)")
+    _job_flags(p)
     if schema:
         p.add_argument("--schema", required=True, help="schema JSON file (api.schema_from_dict format)")
 
@@ -872,13 +798,13 @@ def build_parser() -> argparse.ArgumentParser:
     vs.set_defaults(fn=cmd_validate_stream)
 
     inf = sub.add_parser("infer", help="infer a schema JSON from a table sample")
-    _common(inf, schema=False)
+    _common(inf)
     inf.add_argument("--sample", type=int, default=1000)
     inf.add_argument("--min-occurrence-ratio", type=float, default=0.8)
     inf.set_defaults(fn=cmd_infer)
 
     d = sub.add_parser("drift", help="KS/PSI distribution drift vs a baseline snapshot")
-    _common(d, schema=False)
+    _common(d)
     d.add_argument("--baseline", required=True, help="baseline table path (same format)")
     d.add_argument("--cols", required=True, help="comma-separated numeric columns")
     d.add_argument("--bins", type=int, default=32)
@@ -888,13 +814,13 @@ def build_parser() -> argparse.ArgumentParser:
     d.set_defaults(fn=cmd_drift)
 
     s = sub.add_parser("stats", help="one-pass column stats")
-    _common(s, schema=False)
+    _common(s)
     s.add_argument("--cols", default=None, help="comma-separated columns (default: all)")
     s.add_argument("--exact", action="store_true", help="exact distinct instead of HLL")
     s.set_defaults(fn=cmd_stats)
 
     i = sub.add_parser("image-suite", help="full image+caption constraint suite")
-    _common(i, schema=False)
+    _common(i)
     i.add_argument("--no-decode", action="store_true")
     i.add_argument("--no-caption", action="store_true")
     i.add_argument("--fail-on-violations", action="store_true")
@@ -903,7 +829,7 @@ def build_parser() -> argparse.ArgumentParser:
     dp = sub.add_parser(
         "dedup", help="duplicate / near-duplicate detection + keep-one dedup"
     )
-    _common(dp, schema=False)
+    _common(dp)
     dp.add_argument("--method", required=True,
                     choices=["exact", "minhash", "simhash", "winnow"])
     dp.add_argument("--id-col", default="doc_id")
@@ -929,7 +855,7 @@ def build_parser() -> argparse.ArgumentParser:
         help="composed training-data pass: quality -> scrub -> dedup -> "
         "reference dedup -> decontam -> mix/quota -> pack",
     )
-    _common(pl, schema=False)
+    _common(pl)
     pl.add_argument("--id-col", default="doc_id")
     pl.add_argument("--text-col", default="text")
     pl.add_argument("--source-col", default="source")
@@ -964,7 +890,7 @@ def build_parser() -> argparse.ArgumentParser:
     dc = sub.add_parser(
         "decontam", help="benchmark decontamination (n-gram eval-set overlap)"
     )
-    _common(dc, schema=False)
+    _common(dc)
     dc.add_argument("--benchmark", required=True,
                     help="benchmark/eval table path (same format as --input)")
     dc.add_argument("--id-col", default="doc_id")
@@ -983,17 +909,20 @@ def build_parser() -> argparse.ArgumentParser:
         help="drop rows whose normalized text occurs in a reference corpus "
         "(Bloom-prefiltered exact anti-join)",
     )
-    _common(da, schema=False)
+    _common(da)
     da.add_argument("--reference", required=True,
                     help="reference corpus path (same format as --input)")
     da.add_argument("--text-col", default="text")
     da.add_argument("--fpr", type=float, default=0.01,
                     help="Bloom false-positive rate (prefilter only; result is exact)")
-    da.add_argument("--no-bloom", action="store_true",
+    # the plain anti-join neither uses nor builds a filter, and a reused
+    # filter is not rebuilt, so at most one of these applies
+    bl = da.add_mutually_exclusive_group()
+    bl.add_argument("--no-bloom", action="store_true",
                     help="plain anti-join (skip the Bloom prefilter)")
-    da.add_argument("--bloom-out", default=None,
+    bl.add_argument("--bloom-out", default=None,
                     help="persist the built filter here for later runs")
-    da.add_argument("--bloom-in", default=None,
+    bl.add_argument("--bloom-in", default=None,
                     help="reuse a filter persisted by --bloom-out (skips the build)")
     da.set_defaults(fn=cmd_dedup_against)
 
@@ -1001,7 +930,7 @@ def build_parser() -> argparse.ArgumentParser:
     ivsub = iv.add_subparsers(dest="ivf_command", required=True)
 
     ib = ivsub.add_parser("build", help="train centroids + write the partitioned index")
-    _common(ib, schema=False)
+    _common(ib)
     ib.add_argument("--vec-col", default="embedding")
     ib.add_argument("--n-clusters", type=int, default=16)
     ib.add_argument("--sample-size", type=int, default=20_000)
@@ -1011,10 +940,7 @@ def build_parser() -> argparse.ArgumentParser:
     iq = ivsub.add_parser("query", help="batched top-k cosine against a written index")
     iq.add_argument("--index", required=True, help="index dir written by ivf build")
     iq.add_argument("--queries", required=True, help="queries table path")
-    iq.add_argument("--format", default="parquet", choices=["parquet", "csv", "json"])
-    iq.add_argument("--csv-header", action="store_true")
-    iq.add_argument("--output", required=True)
-    iq.add_argument("--cores", default=None)
+    _job_flags(iq)
     iq.add_argument("--id-col", default="vec_id")
     iq.add_argument("--vec-col", default="embedding")
     iq.add_argument("--query-id-col", default="query_id")

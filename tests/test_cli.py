@@ -27,6 +27,15 @@ def _write_schema(tmp_path, d=EVENTS_SCHEMA):
     return str(p)
 
 
+def _metrics(out, command):
+    """A finished job's metrics.json, after checking the two keys every
+    command writes: its subcommand name and a float elapsed_sec >= 0."""
+    m = json.loads((out / "metrics.json").read_text())
+    assert m["command"] == command
+    assert isinstance(m["elapsed_sec"], float) and m["elapsed_sec"] >= 0
+    return m
+
+
 class TestSchemaFromDict:
     def test_round_trip_fields_and_options(self):
         s = schema_from_dict(
@@ -77,7 +86,7 @@ class TestValidateCommand:
         )
         rc = cmd_validate(args)
         assert rc == 0  # no --fail-on-violations → 0 even with violations
-        metrics = json.loads((tmp_path / "out" / "metrics.json").read_text())
+        metrics = _metrics(tmp_path / "out", "validate")
         viol = spark.read.parquet(str(tmp_path / "out" / "violations"))
         # written rows ≡ the library pass over the same schema JSON
         from sinter_spark.binding import bind
@@ -107,6 +116,20 @@ class TestValidateCommand:
         )
         assert cmd_validate(args) == 2
 
+    def test_checkpoint_without_row_key_exits(self, spark, sf_dir, tmp_path):
+        args = build_parser().parse_args(
+            [
+                "validate",
+                "--input", f"{sf_dir}/events.parquet",
+                "--schema", _write_schema(tmp_path),
+                "--output", str(tmp_path / "out"),
+                "--checkpoint", str(tmp_path / "wh"),
+            ]
+        )
+        with pytest.raises(SystemExit, match="--checkpoint needs --row-key"):
+            cmd_validate(args)
+        assert not (tmp_path / "out" / "metrics.json").exists()
+
     def test_checkpointed_equals_single_pass_and_resumes(self, spark, sf_dir, tmp_path):
         common = [
             "validate",
@@ -128,8 +151,8 @@ class TestValidateCommand:
             ]
         )
         cmd_validate(ck)
-        m_plain = json.loads((tmp_path / "plain" / "metrics.json").read_text())
-        m_ck = json.loads((tmp_path / "ck" / "metrics.json").read_text())
+        m_plain = _metrics(tmp_path / "plain", "validate")
+        m_ck = _metrics(tmp_path / "ck", "validate")
         assert m_ck["violations"] == m_plain["violations"]
         assert m_ck["rows"] == m_plain["rows"]
         assert m_ck["buckets_done"] == 8
@@ -145,7 +168,7 @@ class TestValidateCommand:
         assert a == b
         # resume: same run-id again is a no-op replay with identical metrics
         cmd_validate(ck)
-        m_ck2 = json.loads((tmp_path / "ck" / "metrics.json").read_text())
+        m_ck2 = _metrics(tmp_path / "ck", "validate")
         assert m_ck2["violations"] == m_ck["violations"]
         assert m_ck2["buckets_done"] == 8
 
@@ -162,6 +185,7 @@ class TestStatsCommand:
             ]
         )
         assert cmd_stats(args) == 0
+        assert _metrics(tmp_path / "out", "stats")["columns"] == 1
         row = spark.read.parquet(str(tmp_path / "out" / "stats")).collect()[0]
         exp = spark.read.parquet(f"{sf_dir}/lineitem.parquet").selectExpr(
             "count(*) n", "count(distinct l_quantity) d", "min(l_quantity) mn", "max(l_quantity) mx"
@@ -199,7 +223,7 @@ class TestImageSuiteCommand:
             ]
         )
         rc = cmd_image_suite(args)
-        metrics = json.loads((tmp_path / "out" / "metrics.json").read_text())
+        metrics = _metrics(tmp_path / "out", "image-suite")
         viol = spark.read.parquet(str(tmp_path / "out" / "violations"))
         assert metrics["violations"] == viol.count()
         assert rc == 0
@@ -232,7 +256,7 @@ class TestSparkSubmit:
             capture_output=True, text=True, timeout=300, cwd=str(tmp_path), env=env,
         )
         assert r.returncode == 0, r.stderr[-2000:]
-        metrics = json.loads((tmp_path / "out" / "metrics.json").read_text())
+        metrics = _metrics(tmp_path / "out", "validate")
         assert metrics["rows"] > 0
 
 
@@ -275,6 +299,7 @@ class TestInferCommand:
         )
         assert cmd_infer(inf) == 0
         body = json.loads((tmp_path / "inf" / "schema.json").read_text())
+        assert _metrics(tmp_path / "inf", "infer")["fields"] == len(body["fields"])
         assert {f[0] for f in body["fields"]} == set(
             spark.read.parquet(f"{sf_dir}/events.parquet").columns
         )
@@ -309,7 +334,7 @@ class TestDriftCommand:
             ]
         )
         assert cmd_drift(same) == 0
-        m = json.loads((tmp_path / "same" / "metrics.json").read_text())
+        m = _metrics(tmp_path / "same", "drift")
         assert all(r["ks"] == 0.0 and r["psi"] == 0.0 for r in m["report"])
 
         drifted = build_parser().parse_args(
@@ -320,7 +345,7 @@ class TestDriftCommand:
             ]
         )
         assert cmd_drift(drifted) == 2
-        m2 = json.loads((tmp_path / "drifted" / "metrics.json").read_text())
+        m2 = _metrics(tmp_path / "drifted", "drift")
         assert "value" in m2["drifted_columns"]
         assert "user_id" not in m2["drifted_columns"]
         # persisted histograms replay: report derives from the written files
@@ -355,9 +380,7 @@ class TestValidateStreamCommand:
                     "--stream-checkpoint", str(tmp_path / "sck"),
                 ]
             )
-            return cmd_validate_stream(args), json.loads(
-                (tmp_path / "out" / "metrics.json").read_text()
-            )
+            return cmd_validate_stream(args), _metrics(tmp_path / "out", "validate-stream")
 
         rc1, m1 = run()
         assert rc1 == 0 and m1["epochs"] == 1
@@ -372,6 +395,54 @@ class TestValidateStreamCommand:
             schema_from_dict(EVENTS_SCHEMA), full, row_key="event_id"
         ).violations.count()
         assert m2["violations"] == expected > m1["violations"]
+
+    def test_no_batch_reads_zero_and_sink_errors_propagate(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        from pyspark.sql.readwriter import DataFrameReader
+
+        from sinter_spark.cli import cmd_validate_stream
+
+        import pyarrow.parquet as pq
+
+        src = tmp_path / "stream_in"
+        src.mkdir()
+        tbl = pq.read_table(f"{sf_dir}/events.parquet").slice(0, 50)
+        pq.write_table(tbl, src / "part1.parquet")
+        schema = _write_schema(tmp_path)
+
+        def run(out):
+            args = build_parser().parse_args(
+                [
+                    "validate-stream",
+                    "--input", str(src),
+                    "--schema", schema,
+                    "--row-key", "event_id",
+                    "--output", str(out),
+                    "--stream-checkpoint", str(tmp_path / "sck"),
+                ]
+            )
+            return cmd_validate_stream(args)
+
+        assert run(tmp_path / "first") == 0
+        # no new files: no batch runs, so this output's sink is never written
+        assert run(tmp_path / "idle") == 0
+        m = _metrics(tmp_path / "idle", "validate-stream")
+        assert (m["violations"], m["epochs"]) == (0, 0)
+
+        # any other failure reading the sink must surface, not read as
+        # "0 violations" (which --fail-on-violations would pass)
+        broken_sink = str(tmp_path / "broken" / "violations")
+        real_parquet = DataFrameReader.parquet
+
+        def parquet(self, *paths, **options):
+            if paths == (broken_sink,):
+                raise RuntimeError("sink count job failed")
+            return real_parquet(self, *paths, **options)
+
+        monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+        with pytest.raises(RuntimeError, match="sink count job failed"):
+            run(tmp_path / "broken")
 
 
 class TestDedupCommand:
@@ -390,7 +461,7 @@ class TestDedupCommand:
             ]
         )
         assert cmd_dedup(args) == 0
-        metrics = json.loads((out / "metrics.json").read_text())
+        metrics = _metrics(out, "dedup")
         assert metrics["docs"] == 500
         assert metrics["pairs"] > 0 and metrics["components"] > 0
         # no silent caps: the drop audit is always present
@@ -419,7 +490,7 @@ class TestDedupCommand:
             ]
         )
         assert cmd_dedup(args) == 2  # dups found + --fail-on-dups
-        metrics = json.loads((out / "metrics.json").read_text())
+        metrics = _metrics(out, "dedup")
         assert metrics["dup_groups"] == 1 and metrics["dup_docs"] == 2
         kept = {
             r["doc_id"]
@@ -443,7 +514,7 @@ class TestDedupCommand:
              "--method", "exact", "--canonical"]
         )
         assert cmd_dedup(args) == 0
-        metrics = json.loads((out / "metrics.json").read_text())
+        metrics = _metrics(out, "dedup")
         # only the real text dup group counts — not the NULL group
         assert metrics["dup_groups"] == 1 and metrics["dup_docs"] == 2
         kept = {
@@ -481,7 +552,7 @@ class TestDedupCommand:
             ]
         )
         assert cmd_dedup(args) == 0
-        metrics = json.loads((out / "metrics.json").read_text())
+        metrics = _metrics(out, "dedup")
         assert (out / "pairs").exists() and (out / "components").exists()
         assert metrics["pairs"] >= 0 and "dropped_buckets" in metrics
 
@@ -503,7 +574,7 @@ class TestIvfCommand:
             ]
         )
         assert cmd_ivf_build(args) == 0
-        m = json.loads((idx / "metrics.json").read_text())
+        m = _metrics(idx, "ivf-build")
         assert m["rows"] == 500 and m["n_clusters"] == 4
         # the index is partitioned by cluster_id (pruned probes)
         assert any(p.name.startswith("cluster_id=") for p in (idx / "data").iterdir())
@@ -526,7 +597,7 @@ class TestIvfCommand:
             ]
         )
         assert cmd_ivf_query(args) == 0
-        qm = json.loads((qout / "metrics.json").read_text())
+        qm = _metrics(qout, "ivf-query")
         assert qm["queries"] == 3 and qm["result_rows"] == 15
         res = spark.read.parquet(str(qout / "results"))
         # each query's own vector is its top hit at cos_sim ~ 1
@@ -562,7 +633,7 @@ class TestDedupSparkSubmit:
             capture_output=True, text=True, timeout=600, cwd=str(tmp_path), env=env,
         )
         assert r.returncode == 0, r.stderr[-2000:]
-        metrics = json.loads((tmp_path / "out" / "metrics.json").read_text())
+        metrics = _metrics(tmp_path / "out", "dedup")
         assert metrics["kept_docs"] > 0 and "dropped_buckets" in metrics
 
 
@@ -588,7 +659,7 @@ class TestDecontamCommand:
             ]
         )
         rc = cmd_decontam(args)
-        metrics = json.loads((out / "metrics.json").read_text())
+        metrics = _metrics(out, "decontam")
         lib = contamination(
             docs, docs.where(F.col("doc_id") % 37 == 0), n=5
         )
@@ -621,12 +692,31 @@ class TestDedupAgainstCommand:
             ]
         )
         assert cmd_dedup_against(args) == 0
-        metrics = json.loads((out / "metrics.json").read_text())
+        metrics = _metrics(out, "dedup-against")
         kept = spark.read.parquet(str(out / "clean"))
         expected = docs.count() - docs.where(F.col("doc_id") % 7 == 0).count()
         # synthetic docs are unique, so dropped == the reference slice
         assert metrics["kept_docs"] == kept.count() == expected
         assert metrics["dropped_docs"] == docs.count() - expected
+
+    @pytest.mark.parametrize(
+        "flags",
+        [
+            ["--bloom-in", "a.bloom", "--bloom-out", "b.bloom"],
+            ["--no-bloom", "--bloom-in", "a.bloom"],
+            ["--no-bloom", "--bloom-out", "b.bloom"],
+        ],
+    )
+    def test_bloom_flags_are_exclusive(self, flags, capsys):
+        # --bloom-in with --bloom-out would reuse the loaded filter and
+        # never write the --bloom-out one; --no-bloom builds no filter
+        with pytest.raises(SystemExit) as exc:
+            build_parser().parse_args(
+                ["dedup-against", "--input", "d", "--reference", "r",
+                 "--output", "o", *flags]
+            )
+        assert exc.value.code == 2
+        assert "not allowed with argument" in capsys.readouterr().err
 
 
 class TestPipelineCommand:
@@ -689,7 +779,7 @@ class TestPipelineCommand:
             ]
         )
         assert cmd_pipeline(args) == 0
-        metrics = json.loads((out / "metrics.json").read_text())
+        metrics = _metrics(out, "pipeline")
         stages = {s["stage"]: s for s in metrics["stages"]}
         # chain integrity: each stage's rows_in == previous rows_out
         seq = metrics["stages"]
@@ -738,12 +828,12 @@ class TestPipelineResume:
             "--seed", "3",
         ]
         assert cmd_pipeline(build_parser().parse_args(argv)) == 0
-        first = json.loads((out / "metrics.json").read_text())
+        first = _metrics(out, "pipeline")
         assert all(not s["resumed"] for s in first["stages"])
 
         # full resume: every stage reused, same counts
         assert cmd_pipeline(build_parser().parse_args(argv + ["--resume"])) == 0
-        again = json.loads((out / "metrics.json").read_text())
+        again = _metrics(out, "pipeline")
         assert [s["rows_out"] for s in again["stages"]] == [
             s["rows_out"] for s in first["stages"]
         ]
@@ -752,7 +842,7 @@ class TestPipelineResume:
         # partial resume: drop the last stage's commit -> only it reruns
         shutil.rmtree(out / "stage_2_mix_sources")
         assert cmd_pipeline(build_parser().parse_args(argv + ["--resume"])) == 0
-        partial = json.loads((out / "metrics.json").read_text())
+        partial = _metrics(out, "pipeline")
         flags = {s["stage"]: s["resumed"] for s in partial["stages"]}
         assert flags["scrub"] and flags["dedup_canonical"]
         assert not flags["mix_sources"]
