@@ -31,7 +31,7 @@ print(f"exact dup groups: {exact.count()}")
 cands = dedup.minhash_lsh_candidates(docs)
 print(f"LSH candidate pairs: {cands.count()}")
 
-# 3. pairs → clusters (min-label propagation) → keep one per cluster
+# 3. pairs → clusters (connected components) → keep one per cluster
 kept = dedup.dedup_canonical(docs, exact=True, threshold=0.5)
 print(f"docs kept after dedup: {kept.count()} of {docs.count()}")
 

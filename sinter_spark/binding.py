@@ -988,6 +988,17 @@ class TableValidationResult:
         import json
         import os
 
+        metrics = self._write_sinks(out_dir, include_validated=include_validated)
+        os.makedirs(out_dir, exist_ok=True)
+        with open(os.path.join(out_dir, "metrics.json"), "w") as f:
+            json.dump(metrics, f, indent=2, default=str)
+        return metrics
+
+    def _write_sinks(self, out_dir: str, *, include_validated: bool = False) -> dict:
+        """:meth:`write_parquet` without ``metrics.json``: for callers
+        (the CLI's ``validate``) that write their own."""
+        import os
+
         self.flagged.persist()
         try:
             self.violations.write.mode("overwrite").parquet(
@@ -1008,9 +1019,6 @@ class TableValidationResult:
             }
         finally:
             self.flagged.unpersist()
-        os.makedirs(out_dir, exist_ok=True)
-        with open(os.path.join(out_dir, "metrics.json"), "w") as f:
-            json.dump(metrics, f, indent=2, default=str)
         return metrics
 
     def to_arrow_batches(self):

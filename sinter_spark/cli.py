@@ -195,8 +195,8 @@ def cmd_validate(args, spark):
         }
     else:
         res = bind(schema, df, row_key=args.row_key, coerce=args.coerce)
-        m = res.write_parquet(args.output)  # violations/ + verdicts/ + metrics.json
-        metrics = {"mode": "single-pass", **m}
+        # violations/ + verdicts/; metrics.json is _job's alone
+        metrics = {"mode": "single-pass", **res._write_sinks(args.output)}
     return metrics, 0 if not args.fail_on_violations or not metrics.get("violations") else 2
 
 
@@ -396,12 +396,7 @@ def cmd_dedup(args, spark):
         metrics["dropped_buckets"] = dropped["n_buckets"]
         metrics["dropped_member_entries"] = dropped["n_member_entries"]
         dd.release_cache(audit_src)
-        algo = (
-            dd.connected_components
-            if args.algorithm == "label"
-            else dd.connected_components_star
-        )
-        comp = _commit(algo(edge), args.output, "components")
+        comp = _commit(dd.connected_components(edge), args.output, "components")
         metrics.update(
             comp.agg(
                 F.count(F.lit(1)).alias("clustered_docs"),
@@ -595,7 +590,7 @@ def cmd_pipeline(args, spark):
     text that will actually be trained on; packing runs last over the
     surviving set.
     """
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation, functions as F
 
     from .operators import decontam, packing, scrub, text
     from .operators.bloom import dedup_against
@@ -605,9 +600,9 @@ def cmd_pipeline(args, spark):
     id_col, text_col = args.id_col, args.text_col
     stages: list[dict] = []
     # id_col hygiene up front (ADVICE r5): the quality stage's
-    # left_semi and the scrub stage's inner join rejoin on id_col with
-    # plain equality — NULL ids would silently vanish there (and
-    # duplicated ids fan the scrub join out) long before packing's
+    # left_semi and dedup's loser anti-join match rows on id_col with
+    # plain equality — NULL ids would silently vanish there (and a
+    # duplicated id is kept or dropped as one) long before packing's
     # loud null-id exclusion, with the loss misattributed to the
     # stage's own filtering. Fail loudly once, mirroring
     # packing._require_integral_key.
@@ -626,7 +621,7 @@ def cmd_pipeline(args, spark):
     if int(row0["n_ids"]) != n:
         raise SystemExit(
             f"pipeline: {id_col!r} is not unique ({row0['n_ids']} distinct over "
-            f"{n} rows) — stage rejoins would fan out duplicated ids"
+            f"{n} rows) — stage joins on it would conflate duplicated ids"
         )
 
     def _reuse_or_commit(rel: str, make_df):
@@ -664,21 +659,25 @@ def cmd_pipeline(args, spark):
         _stage("quality_filter", _quality, min_quality=args.min_quality)
 
     if args.scrub:
-        audit: dict = {}
+        audit = None
 
         def _scrub(df=df):
-            scrubbed = scrub.scrub_text(df, text_col, id_col)
-            # ONE aggregation job for the whole audit — and none at all
-            # when --resume reuses the committed stage output
-            cols = [c for c in scrubbed.columns if c.startswith("n_")]
-            row = scrubbed.agg(*[F.sum(c).alias(c) for c in cols]).collect()[0]
-            audit.update({f"total_{c}": row[c] for c in cols})
-            return df.drop(text_col).join(
-                scrubbed.select(id_col, F.col("scrubbed").alias(text_col)), id_col
-            )
+            # ONE projection, no join, in the column order the stage
+            # has always written; the audit totals ride the committing
+            # write as an Observation, so the regexes run once, and a
+            # stage --resume reuses reports no audit
+            nonlocal audit
+            audit = Observation("scrub_audit")
+            rest = [c for c in df.columns if c not in (id_col, text_col)]
+            return df.observe(
+                audit,
+                *[F.sum(n).alias(f"total_n_{name}")
+                  for name, n in scrub.pattern_counts(text_col).items()],
+            ).select(id_col, *rest, scrub.scrub_column(text_col).alias(text_col))
 
         _stage("scrub", _scrub)
-        stages[-1].update(audit)
+        if audit is not None:
+            stages[-1].update(audit.get)
 
     if args.dedup:
         _stage("dedup_canonical", lambda df=df: dedup_canonical(df, id_col, text_col))
@@ -842,8 +841,6 @@ def build_parser() -> argparse.ArgumentParser:
                     help="winnow: min shared fingerprints per pair")
     dp.add_argument("--max-bucket", type=int, default=1000,
                     help="LSH mega-bucket cap (drops audited in metrics.json)")
-    dp.add_argument("--algorithm", default="label", choices=["label", "star"],
-                    help="connected-components algorithm")
     dp.add_argument("--canonical", action="store_true",
                     help="also write canonical/ (keep-one deduped table)")
     dp.add_argument("--fail-on-dups", action="store_true",

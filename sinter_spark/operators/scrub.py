@@ -59,17 +59,23 @@ def scrub_text(
     """
     pats = PATTERNS if patterns is None else patterns
     c = F.col(text_col)
-    counts = [
-        F.when(
-            c.isNotNull(), F.size(F.regexp_extract_all(c, F.lit(p), 0))
-        )
-        .otherwise(F.lit(0))
-        .alias(f"n_{name}")
-        for name, (p, _) in pats.items()
-    ]
+    counts = [n.alias(f"n_{name}") for name, n in pattern_counts(c, pats).items()]
     return df.select(
         F.col(id_col), scrub_column(c, pats).alias("scrubbed"), *counts
     )
+
+
+def pattern_counts(
+    col: Column | str, patterns: Mapping[str, tuple[str, str]] | None = None
+) -> dict[str, Column]:
+    """name -> occurrences of that pattern in the text (0 for NULL)."""
+    c = F.col(col) if isinstance(col, str) else col
+    pats = PATTERNS if patterns is None else patterns
+    return {
+        name: F.when(c.isNotNull(), F.size(F.regexp_extract_all(c, F.lit(p), 0)))
+        .otherwise(F.lit(0))
+        for name, (p, _) in pats.items()
+    }
 
 
 def scrub_oracle_sql(table: str = "documents") -> str:

@@ -328,7 +328,7 @@ def semantic_dedup(
 
     Default path is the scale one: `rp_lsh_near_pairs` (join-free
     banded hyperplane LSH, capped + audited, exact-cosine verified)
-    feeding min-label connected components; ``exact=True`` swaps in
+    feeding `dedup.connected_components`; ``exact=True`` swaps in
     the documented O(n²) `cosine_self_pairs` — the oracle-comparable
     path the driver query uses at small sf (same convention as
     `dedup.near_dup_components(exact=True)`).
@@ -355,9 +355,9 @@ def semantic_dedup(
             max_bucket=max_bucket,
         )
         try:
-            # CC persists the edge list in round 1 — the LSH bucket
-            # cache is dead weight after that (same pattern as
-            # dedup.near_dup_components)
+            # CC reads the pairs once and returns materialized — the
+            # LSH bucket cache is dead weight after that (same pattern
+            # as dedup.near_dup_components)
             comp = connected_components(pairs.select("id_a", "id_b"))
         finally:
             release_cache(pairs)

@@ -103,6 +103,34 @@ class TestValidateCommand:
         verdicts = spark.read.parquet(str(tmp_path / "out" / "verdicts"))
         assert verdicts.selectExpr("sum(rows)").collect()[0][0] == metrics["rows"]
 
+    def test_metrics_json_written_once(self, spark, sf_dir, tmp_path, monkeypatch):
+        """Single-pass validate: _job writes metrics.json; the result
+        export must not write (and then lose) a second copy first."""
+        import builtins
+
+        writes = []
+        real_open = builtins.open
+
+        def recording_open(file, mode="r", *a, **kw):
+            if str(file).endswith("metrics.json") and "w" in mode:
+                writes.append(str(file))
+            return real_open(file, mode, *a, **kw)
+
+        args = build_parser().parse_args(
+            [
+                "validate",
+                "--input", f"{sf_dir}/events.parquet",
+                "--schema", _write_schema(tmp_path),
+                "--row-key", "event_id",
+                "--output", str(tmp_path / "out"),
+            ]
+        )
+        monkeypatch.setattr(builtins, "open", recording_open)
+        assert cmd_validate(args) == 0
+        monkeypatch.undo()
+        assert writes == [str(tmp_path / "out" / "metrics.json")]
+        assert _metrics(tmp_path / "out", "validate")["mode"] == "single-pass"
+
     def test_fail_on_violations_exit_code(self, spark, sf_dir, tmp_path):
         args = build_parser().parse_args(
             [
@@ -548,7 +576,6 @@ class TestDedupCommand:
                 "--output", str(out),
                 "--method", "winnow",
                 "--min-shared", "15",
-                "--algorithm", "star",
             ]
         )
         assert cmd_dedup(args) == 0
@@ -810,6 +837,52 @@ class TestPipelineCommand:
         assert stages["pack"]["total_tokens"] == (
             packed.agg(F.sum("n_tokens")).collect()[0][0]
         )
+
+
+    def test_scrub_stage_with_pii_matches_scrub_text(self, spark, sf_dir, tmp_path, monkeypatch):
+        """The scrub stage is one projection (no join) whose text and
+        audit totals equal scrub_text's on a corpus with PII planted as
+        in scrub_oracle_sql; a resumed stage reports no audit."""
+        from pyspark.sql import functions as F
+
+        from sinter_spark import cli
+        from sinter_spark.operators.scrub import inject_pii_column, scrub_text
+
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        src = tmp_path / "pii.parquet"
+        docs.withColumn("text", inject_pii_column()).write.parquet(str(src))
+        injected = spark.read.parquet(str(src))
+        committed = {}
+        real_commit = cli._commit
+
+        def recording_commit(df, out, name):
+            committed[name] = df
+            return real_commit(df, out, name)
+
+        monkeypatch.setattr(cli, "_commit", recording_commit)
+        out = tmp_path / "plpii"
+        argv = ["pipeline", "--input", str(src), "--output", str(out), "--scrub"]
+        assert cli.cmd_pipeline(build_parser().parse_args(argv)) == 0
+        stage = _metrics(out, "pipeline")["stages"][0]
+
+        plan = committed["stage_0_scrub"]._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan
+        lib = scrub_text(injected)
+        counts = [c for c in lib.columns if c.startswith("n_")]
+        want = lib.agg(*[F.sum(c).alias(f"total_{c}") for c in counts]).collect()[0].asDict()
+        assert {k: stage[k] for k in want} == want
+        assert all(v > 0 for v in want.values())
+        got = spark.read.parquet(str(out / "stage_0_scrub"))
+        assert got.columns == ["doc_id"] + [
+            c for c in injected.columns if c not in ("doc_id", "text")
+        ] + ["text"]
+        assert sorted(got.select("doc_id", "text").collect()) == sorted(
+            lib.select("doc_id", F.col("scrubbed").alias("text")).collect()
+        )
+
+        assert cli.cmd_pipeline(build_parser().parse_args(argv + ["--resume"])) == 0
+        resumed = _metrics(out, "pipeline")["stages"][0]
+        assert resumed["resumed"] and not any(k.startswith("total_") for k in resumed)
 
 
 class TestPipelineResume:

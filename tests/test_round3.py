@@ -5,9 +5,9 @@ ADVICE_r02 defects.
   post_validate = FIRST non-nil; pre_validate not merged).
 - near_dup_components releases the LSH bucket cache (no per-call
   MEMORY_AND_DISK leak).
-- connected_components: exactly ONE action per round (convergence read
-  from the same persisted table) and a RuntimeWarning on max_iter
-  exhaustion instead of a silent split-component result.
+- connected_components: exactly ONE action per round (the edge-set
+  signature of the round's checkpoint) and a RuntimeWarning on
+  max_iter exhaustion instead of a silent split-component result.
 - widen_small_scan is a no-op on streaming DataFrames.
 - ivf.train_centroids runs no full-table count() job.
 - mega-bucket cap: dropped mass is reportable (no silent caps) on
@@ -67,21 +67,27 @@ class TestCacheAndComponents:
 
     def test_connected_components_one_action_per_round(self, spark, monkeypatch):
         calls = {"n": 0}
-        orig = DataFrame.count
+        orig_collect, orig_count = DataFrame.collect, DataFrame.count
 
-        def counting(self):
+        def counting_collect(self):
             calls["n"] += 1
-            return orig(self)
+            return orig_collect(self)
 
-        monkeypatch.setattr(DataFrame, "count", counting)
-        # triangle: converges after round 2 (round 1 relabels, round 2 confirms)
+        def counting_count(self):
+            calls["n"] += 1
+            return orig_count(self)
+
+        monkeypatch.setattr(DataFrame, "collect", counting_collect)
+        monkeypatch.setattr(DataFrame, "count", counting_count)
+        # triangle: converges after round 2 (round 1 rewires it into a
+        # star, round 2 confirms)
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (1, 3)], "id_a bigint, id_b bigint"
         )
         labels = dedup.connected_components(pairs)
         n_actions = calls["n"]
         monkeypatch.undo()
-        assert n_actions == 2  # one count per round, nothing else
+        assert n_actions == 3  # the initial signature + one per round, nothing else
         got = {r["node"]: r["component"] for r in labels.collect()}
         assert got == {1: 1, 2: 1, 3: 1}
 
@@ -108,32 +114,16 @@ class TestStarComponents:
     def _labels(self, df):
         return {r["node"]: r["component"] for r in df.collect()}
 
-    def test_star_equals_label_prop_on_mixed_graph(self, spark):
-        rng = np.random.default_rng(17)
-        # mixed shape: two cliques + a chain + singleton pairs
-        edges = (
-            [(i, j) for i in range(5) for j in range(i + 1, 5)]
-            + [(10 + i, 10 + j) for i in range(4) for j in range(i + 1, 4)]
-            + [(20 + i, 21 + i) for i in range(12)]
-            + [(50, 51), (60, 61)]
-            + [(int(a), int(b)) for a, b in rng.integers(100, 140, size=(30, 2)) if a != b]
-        )
-        pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-        star = self._labels(dedup.connected_components_star(pairs))
-        prop = self._labels(dedup.connected_components(pairs, max_iter=50))
-        assert star == prop
-
-    def test_star_self_pairs_match_label_prop_singletons(self, spark):
+    def test_star_self_pairs_are_singletons(self, spark):
         pairs = spark.createDataFrame(
             [(1, 2), (7, 7), (9, 9)], "id_a bigint, id_b bigint"
         )
-        star = self._labels(dedup.connected_components_star(pairs))
-        prop = self._labels(dedup.connected_components(pairs))
-        assert star == prop == {1: 1, 2: 1, 7: 7, 9: 9}
+        labels = self._labels(dedup.connected_components(pairs))
+        assert labels == {1: 1, 2: 1, 7: 7, 9: 9}
 
-    def test_star_converges_on_long_chain_where_label_prop_cannot(self, spark):
-        """A 64-node path: label propagation needs ~63 rounds; the
-        star rounds need O(log n) — the documented scale upgrade."""
+    def test_star_converges_on_long_chain(self, spark):
+        """A 65-node path: min-label propagation would need ~64 rounds;
+        the star rounds need O(log n)."""
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(64)], "id_a bigint, id_b bigint"
         )
@@ -141,27 +131,27 @@ class TestStarComponents:
 
         with warnings.catch_warnings():
             warnings.simplefilter("error", RuntimeWarning)  # no-fixpoint would raise
-            labels = self._labels(
-                dedup.connected_components_star(pairs, max_iter=12)
-            )
+            labels = self._labels(dedup.connected_components(pairs, max_iter=12))
         assert labels == {i: 0 for i in range(65)}
 
     def test_star_round_count_is_logarithmic(self, spark, monkeypatch):
         calls = {"n": 0}
-        orig = DataFrame.count
+        orig = DataFrame.collect
 
         def counting(self):
             calls["n"] += 1
             return orig(self)
 
-        monkeypatch.setattr(DataFrame, "count", counting)
+        monkeypatch.setattr(DataFrame, "collect", counting)
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(128)], "id_a bigint, id_b bigint"
         )
-        dedup.connected_components_star(pairs, max_iter=15)
+        dedup.connected_components(pairs, max_iter=15)
         n_actions = calls["n"]
         monkeypatch.undo()
-        assert n_actions <= 10  # one count per round; ~log2(128)+fixpoint
+        # one signature collect per round, plus the initial one:
+        # ~log2(128) rounds + the fixpoint round
+        assert n_actions <= 10
 
 
 class TestStreamingWiden:

@@ -206,7 +206,7 @@ class TestDroppedMassReuse:
 
 class TestStarOneActionPerRound:
     def test_star_actions_bounded_by_rounds(self, spark, monkeypatch):
-        """VERDICT_r03 #4: the star convergence probe is ONE signature
+        """VERDICT_r03 #4: the convergence probe is ONE signature
         aggregate per round (plus the initial signature) — no
         exceptAll set-ops, no extra actions."""
         from pyspark.sql.classic.dataframe import DataFrame as CDF
@@ -229,7 +229,7 @@ class TestStarOneActionPerRound:
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(128)], "id_a bigint, id_b bigint"
         )
-        dedup.connected_components_star(pairs, max_iter=15)
+        dedup.connected_components(pairs, max_iter=15)
         n_actions = calls["n"]
         monkeypatch.undo()
         # ~log2(128) rounds + fixpoint round + the initial signature
