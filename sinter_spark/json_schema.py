@@ -376,13 +376,14 @@ def validate_schema(schema: Schema | dict, *, draft: str | None = None, **gen_op
             # "draft overrides the default meta-schema" means validate
             # under that draft, not under whatever the doc carries
             doc = {**doc, "$schema": _DRAFT_URIS[_normalize_draft(draft)]}
-        jsonschema.validators.validator_for(doc).check_schema(doc)
-        # validator_for silently falls back on unknown $schema URIs and
-        # check_schema tolerates unknown "type" values under some metas;
-        # mirror JSV's stricter "could not build" behavior structurally
+        # JSV's stricter "could not build" checks run first: check_schema
+        # tolerates unknown "type" values under some metas, and
+        # validator_for only warns on an unknown $schema URI and falls
+        # back (a fallback jsonschema deprecates)
         ok, msg = _structural_check(doc)
         if not ok:
             return False, f"could not build: {msg}"
+        jsonschema.validators.validator_for(doc).check_schema(doc)
         return True, "validated against meta-schema"
     except ImportError:
         ok, msg = _structural_check(doc)

@@ -324,7 +324,8 @@ def grouped_bucket_pairs(
     max_bucket: int | None,
     cache: bool,
     extra_col: str | None = None,
-    pair_mode: str = "bucket",
+    *,
+    pair_mode: str,
 ) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
     """Join-free per-bucket (a < b) pair expansion — the shape shared
     by every LSH candidate path (minhash bands, hamming blocks, rp-lsh
@@ -340,33 +341,34 @@ def grouped_bucket_pairs(
 
     Returns ``(pairs, audit, handle)``: pairs carry (id_a, id_b) —
     plus (va, vb) when ``extra_col`` names a per-member payload column
-    (e.g. the simhash fingerprint) — and are per-bucket, NOT distinct
-    across buckets. ``audit`` is the oversized-bucket table (keys +
-    ``n_members``, exact distinct-member counts); ``handle`` is the
+    (e.g. the simhash fingerprint) — and are distinct within each
+    kernel output batch, NOT across batches or partitions. ``audit``
+    is the oversized-bucket table (keys + ``n_members``, exact
+    distinct-member counts); ``handle`` is the
     persisted bounded bucket table when ``cache`` (release with
     :func:`release_cache`) so ``dropped_mass`` re-reads it instead of
     recomputing signatures. Pair volume per row is bounded by
     ``max_bucket²`` — the cap that makes the explode row-local-safe.
 
-    ``pair_mode`` lets a caller declare what it does with the pairs so
-    the explode volume shrinks before the expensive downstream shuffle
-    (guide §2.3 "aggregate before you shuffle"):
+    ``pair_mode`` (required) declares what the caller does with the
+    pairs, so the explode volume shrinks before the expensive
+    downstream shuffle (guide §2.3 "aggregate before you shuffle"):
 
-    * ``"bucket"`` — per-bucket pairs with full multiplicity (one row
-      per bucket the pair meets in); the neutral default.
-    * ``"distinct_sets"`` — member ARRAYS are deduplicated before the
-      explode. ONLY valid when the caller applies ``.distinct()`` to
-      the pairs: two buckets with identical membership yield identical
-      pair sets, so dropping the duplicate array drops only rows the
-      caller's distinct would drop anyway. On a banded corpus this is
-      the big lever — a J≈1 cluster colliding in all b bands explodes
-      once instead of b times (measured at sf1.0: 660M → 42M pair rows
-      ahead of the distinct, 5000× fewer duplicate rows shuffled).
-    * ``"weighted"`` — arrays are grouped and pairs carry ``_w`` = the
-      number of buckets with that exact member set; callers that COUNT
-      bucket co-occurrence per pair (winnow's ``n_shared``) replace
-      ``count(*)`` with ``sum(_w)`` for the same result over the same
-      collapsed explode.
+    * ``"distinct_sets"`` — the caller applies ``.distinct()`` to the
+      pairs. Member ARRAYS are deduplicated before the explode: two
+      buckets with identical membership yield identical pair sets, so
+      dropping the duplicate array drops only rows the caller's
+      distinct would drop anyway. On a banded corpus this is the big
+      lever — a J≈1 cluster colliding in all b bands explodes once
+      instead of b times (measured at sf1.0: 660M → 42M pair rows
+      ahead of the distinct). The kernel then emits each pair once per
+      output batch.
+    * ``"weighted"`` — the caller sums ``_w`` per pair. Arrays are
+      grouped and carry ``_w`` = the number of buckets with that exact
+      member set; the kernel emits each pair once per output batch with
+      the exact sum of its ``_w``. Callers that COUNT bucket
+      co-occurrence per pair (winnow's ``n_shared``) get the same
+      result from ``sum(_w)`` as from ``count(*)`` over every bucket.
 
     Concentration-proofing (VERDICT_r04 #3, round-6 single-pass form):
     with a cap set, NO degenerate bucket ever materializes an
@@ -426,8 +428,6 @@ def grouped_bucket_pairs(
         small = small.select("_ids").distinct()
     elif pair_mode == "weighted":
         small = small.groupBy("_ids").agg(F.count(F.lit(1)).alias("_w"))
-    elif pair_mode == "bucket":
-        small = small.select("_ids")
     else:
         raise ValueError(f"grouped_bucket_pairs: unknown pair_mode {pair_mode!r}")
     # pair expansion runs as a vectorized Arrow kernel (round 6): the
@@ -464,14 +464,35 @@ def _pair_explode_kernel(*, has_weight: bool, is_struct: bool,
 
     Input batches carry ``_ids`` (sorted member array per bucket) and,
     when ``has_weight``, ``_w``. For every array of length n the kernel
-    emits its n·(n−1)/2 ordered pairs by building two global index
+    enumerates its n·(n−1)/2 ordered pairs by building two global index
     vectors into the batch's flattened values (classic repeat/cumsum
-    triangular expansion — no Python per-row loop, no per-pair object)
-    and issuing one Arrow ``take`` per output column; rows are chunked
-    so no output batch exceeds ``max_pairs_per_chunk`` pairs."""
+    triangular expansion — no Python per-row loop, no per-pair object);
+    rows are chunked so no chunk enumerates more than
+    ``max_pairs_per_chunk`` pairs unless one array alone does.
+
+    Each chunk is combined in numpy before it is yielded. Every distinct
+    member value of the batch gets an integer code from
+    ``pc.dictionary_encode`` (a struct member combines the codes of its
+    ``i`` and ``v`` fields, so its identity is the whole (id, payload)
+    value) and each pair packs into one key ``code_a << 32 | code_b``;
+    list offsets are int32, so the codes fit. Without ``has_weight`` a
+    chunk emits each key once; with it, once with the exact int64 sum
+    of its ``_w``. A pair can still recur across chunks and batches:
+    the caller's ``.distinct()`` / ``groupBy(...).sum("_w")`` makes the
+    result global, over far fewer rows."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
+
+    def _codes(arr):
+        enc = pc.dictionary_encode(arr, null_encoding="encode")
+        return enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+
+    def _member_codes(flat):
+        if not is_struct:
+            return _codes(flat)
+        packed = (_codes(flat.field("i")) << 32) | _codes(flat.field("v"))
+        return np.unique(packed, return_inverse=True)[1].astype(np.int64)
 
     def _kernel(batches):
         for batch in batches:
@@ -479,6 +500,7 @@ def _pair_explode_kernel(*, has_weight: bool, is_struct: bool,
             lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
             lens = np.nan_to_num(lens.astype(np.float64)).astype(np.int64)
             flat = col.flatten()
+            codes = _member_codes(flat)
             starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
             nm1_all = np.maximum(lens - 1, 0)
             npairs = lens * nm1_all // 2
@@ -510,7 +532,13 @@ def _pair_explode_kernel(*, has_weight: bool, is_struct: bool,
                 within = np.arange(tot) - np.repeat(cum_rl, run_len)
                 ia = np.repeat(starts[rows][rep_rows] + i_within, run_len)
                 ib = ia + 1 + within
-                ta, tb = pa.array(ia), pa.array(ib)
+                # combine: one row per distinct (value_a, value_b)
+                key = (codes[ia] << 32) | codes[ib]
+                order = np.argsort(key)
+                sk = key[order]
+                heads = np.flatnonzero(np.concatenate(([True], sk[1:] != sk[:-1])))
+                keep = order[heads]
+                ta, tb = pa.array(ia[keep]), pa.array(ib[keep])
                 if is_struct:
                     fi, fv = flat.field("i"), flat.field("v")
                     arrays = [fi.take(ta), fi.take(tb), fv.take(ta), fv.take(tb)]
@@ -520,7 +548,7 @@ def _pair_explode_kernel(*, has_weight: bool, is_struct: bool,
                     names = ["id_a", "id_b"]
                 if has_weight:
                     w_pair = np.repeat(wnp[rows][rep_rows], run_len)
-                    arrays.append(pa.array(w_pair))
+                    arrays.append(pa.array(np.add.reduceat(w_pair[order], heads)))
                     names.append("_w")
                 yield pa.RecordBatch.from_arrays(arrays, names=names)
 

@@ -17,6 +17,19 @@ Python call-site fragment; pass
 ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
 to get it back while debugging.
 
+Spark keeps the classes Janino compiles for generated code in one
+JVM-wide cache, ``spark.sql.codegen.cache.maxEntries``, set here to
+1000. Spark's default of 100 is a Guava ``maximumSize(100)`` cache
+split into four segments of about 25 entries, each evicting on its
+own. A session running the curation ops (minhash, winnow, simhash and
+decontamination over a 1,000-doc corpus, fetched once and then
+counted) uses 113 distinct generated classes, so with the default
+every warm op re-ran Janino on 22 classes, and the JIT then had to
+compile each new class again (counted on a 4-core host through
+``CodegenMetrics``). With 1000 entries a warm op compiles none. It is
+a static conf, read when the session is built; ``extra_conf``
+overrides it like any other default.
+
 Small driver-side tables (dimension tables, drift findings, checkpoint
 state rows) are built with :func:`local_frame`, which ships them as
 Arrow so the plan holds a JVM ``LocalRelation``. A Python list passed
@@ -121,6 +134,7 @@ def get_spark(
         # aligns local behavior with scale instead of diverging from it
         .config("spark.shuffle.sort.bypassMergeThreshold", "1")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

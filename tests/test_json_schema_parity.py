@@ -8,6 +8,7 @@ spec-compliance. Pure driver-side — no Spark session needed.
 
 from __future__ import annotations
 
+import warnings
 from datetime import datetime
 
 import pytest
@@ -390,6 +391,17 @@ class TestValidateSchema:
         )
         assert not ok
         assert "could not build" in msg
+
+    def test_unknown_meta_schema_skips_deprecated_fallback(self):
+        # jsonschema warns (and will raise) when validator_for meets an
+        # unknown $schema; the structural check must reject it first
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", DeprecationWarning)
+            ok, msg = validate_schema(
+                {"$schema": "https://example.com/unknown-schema", "type": "object"}
+            )
+        assert not ok
+        assert msg == "could not build: unknown meta-schema https://example.com/unknown-schema"
 
     def test_rejects_invalid_type(self):
         # json_schema_test.exs:573-580

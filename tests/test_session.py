@@ -1,12 +1,14 @@
 """Session defaults are sized from the host, not hard-coded: the JVM
 heap must stay below physical RAM (a larger max heap lets the JVM grow
-until the kernel kills it) and local mode uses every host core."""
+until the kernel kills it) and local mode uses every host core. The
+codegen cache holds a session's working set of generated classes."""
 
 import os
 from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from sinter_spark.session import get_spark
 
@@ -76,3 +78,29 @@ def test_live_session_skips_call_site_capture(spark, monkeypatch):
     assert spark.conf.get(_DEBUGGING) == "false"
     monkeypatch.setattr(utils, "_enable_debugging_cache", None)
     assert utils.is_debugging_enabled() is False
+
+
+_CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+
+
+def test_codegen_cache_default_and_override(options):
+    get_spark()
+    assert options[_CODEGEN_CACHE] == "1000"
+    get_spark(extra_conf={_CODEGEN_CACHE: "50"})
+    assert options[_CODEGEN_CACHE] == "50"
+
+
+def test_live_session_keeps_generated_classes(spark):
+    """More distinct generated classes than Spark's default cache of 100
+    holds: the second run of the same queries compiles nothing."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    base = spark.range(1, numPartitions=1)
+    # each literal is inlined into its own generated class
+    queries = [base.select((F.col("id") * 7 + i).alias("x")) for i in range(120)]
+    for q in queries:
+        q.collect()
+    before = compiles.getCount()
+    for q in queries:
+        q.collect()
+    assert compiles.getCount() == before
